@@ -68,7 +68,7 @@ object SparkEntry {
         SketchOps.defs ++ GraphOps.defs
     val unknown = memoServed.diff(raw.keySet)
     require(unknown.isEmpty, s"memoServed names not registered: $unknown")
-    raw.map { case (k, v) => k -> v.copy(memo = memoServed(k)) }
+    raw.map { case (k, v) => k -> v.withMemo(memoServed(k)) }
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -80,7 +80,15 @@ object SparkEntry {
     all.map { case (k, v) => k -> v.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. Omitted for non-SQL-expressible ops, and for
+    * an oracle whose input is missing — that one is reported on stderr
+    * with its reason and fails only its own query. */
   def oracleSql: Map[String, String] =
-    all.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }
+    all.flatMap { case (k, v) =>
+      try v.oracle.map(k -> _)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[oracle] $k: no oracle SQL: $e")
+        None
+      }
+    }
 }

@@ -98,7 +98,11 @@ object Generator {
 
     f.dataType match {
       case StringType =>
-        val len = if (declaredLen == -1) 100 else declaredLen
+        // a uniqueidentifier declares no length, yet holds at most a
+        // 36-character GUID — a keyword rule (e.g. a sentence for
+        // `AciklamaId`) must not outgrow it
+        val len = if (declaredLen == -1) 100
+          else if (sqlType == "uniqueidentifier") 36 else declaredLen
         val s = value.cast(StringType)
         if (len > 0) substring(s, 1, len) else s
 

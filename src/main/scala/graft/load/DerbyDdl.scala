@@ -49,6 +49,16 @@ object DerbyDdl {
     }
   }
 
+  /** Derby's comparison family of a column: values compare only within
+    * one family (any number with any number, strings with strings, …);
+    * BLOBs compare with nothing (None). */
+  def compareFamily(f: StructField): Option[String] =
+    derbyType(f).takeWhile(_ != '(') match {
+      case "SMALLINT" | "INTEGER" | "BIGINT" | "NUMERIC" | "DOUBLE" | "REAL" => Some("NUMBER")
+      case "BLOB" => None
+      case other => Some(other)
+    }
+
   /** CREATE TABLE without PK/FK constraints (armed post-load). NOT NULL
     * is kept only where the insert projection actually supplies a value;
     * DB-assigned identity columns keep it via the identity clause. */

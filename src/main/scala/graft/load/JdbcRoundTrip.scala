@@ -1,7 +1,8 @@
 package graft.load
 
 import java.sql.DriverManager
-import graft.ddl.Catalog
+import scala.jdk.CollectionConverters._
+import graft.ddl.{Catalog, Fk}
 import graft.gen.GeneratePipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,8 +41,8 @@ final case class PartReadbackReport(table_name: String, n_strides: Int,
   *
   *   probe/create DB (S9, apply_mssql.py:27-43) → deploy retargeted DDL
   *   (§2.8) → generate FK-consistent rows → distributed JDBC append (K1)
-  *   → re-arm constraints (K4) → read back through spark.read.jdbc and
-  *   audit counts + referential integrity.
+  *   → re-arm constraints (K4) → read back through the JDBC source and
+  *   audit counts + referential integrity in one database-side statement.
   *
   * In-memory Derby is a local-mode harness (executors share the JVM); on
   * a real cluster the same code points the URL at a network database and
@@ -93,8 +94,9 @@ object JdbcRoundTrip {
     *  - integral PK: MOD(pk, 4) = 0..3;
     *  - multi-column, non-strideable, or absent PK: one full stride
     *    (recorded as n_strides = 1 — no silent cap).
-    * Counts reduce through ONE unioned Spark job (auditReadback's
-    * job-overhead discipline). */
+    * The strides' counts reduce through one unioned Spark plan; unlike
+    * auditReadback, which lets the database count, this read goes through
+    * the concurrent strides on purpose — they are what it audits. */
   private def partitionedReadback(spark: SparkSession, url: String,
       target: JdbcSink.Target, catalog: Catalog, targets: Seq[String])
       : Seq[PartReadbackReport] = {
@@ -182,17 +184,17 @@ object JdbcRoundTrip {
     })
     results.filterNot(_.ok).foreach(r => sys.error(s"generate ${r.table}: ${r.error}"))
 
-    // Re-arm constraints (K4 "enable" equivalent) — per-statement error
-    // tolerance like apply_mssql.py:94-102; Derby validates on ADD, so a
-    // failure here is a real integrity signal, recorded per table.
-    val pkOk: Map[String, Boolean] = targets.map { t =>
-      t -> DerbyDdl.addPkSql(catalog(t)).forall(sql =>
-        JdbcSink.execute(target, Seq(sql)).head.isEmpty)
-    }.toMap
-    val fkOk: Map[String, Int] = targets.map { t =>
-      t -> catalog(t).fks.count(fk =>
-        JdbcSink.execute(target, Seq(DerbyDdl.addFkSql(fk))).head.isEmpty)
-    }.toMap
+    // Re-arm constraints (K4 "enable" equivalent) — one connection per
+    // pass (PKs, then FKs), per-statement error tolerance like
+    // apply_mssql.py:94-102; Derby validates on ADD, so a failure here is
+    // a real integrity signal, recorded per table.
+    val pkSql = targets.flatMap(t => DerbyDdl.addPkSql(catalog(t)).map(t -> _))
+    val pkRefused: Set[String] = JdbcSink.execute(target, pkSql.map(_._2)).zip(pkSql)
+      .collect { case (Some(_), (t, _)) => t }.toSet
+    val pkOk: Map[String, Boolean] = targets.map(t => t -> !pkRefused(t)).toMap
+    val fkSql = targets.flatMap(t => catalog(t).fks.map(fk => t -> DerbyDdl.addFkSql(fk)))
+    val fkOk: Map[String, Int] = JdbcSink.execute(target, fkSql.map(_._2)).zip(fkSql)
+      .collect { case (None, (t, _)) => t }.groupMapReduce(identity)(_ => 1)(_ + _)
 
     // Read back through the JDBC source and audit.
     val (nReadback, fkBad) = auditReadback(spark, url, target, catalog, targets)
@@ -200,41 +202,62 @@ object JdbcRoundTrip {
     targets.sorted.map { t =>
       val td = catalog(t)
       TableLoadReport(t, loaded.getOrElse(t, 0L), nReadback(t),
-        fkBad.getOrElse(t, 0L), pkOk(t), td.fks.size, fkOk(t))
+        fkBad.getOrElse(t, 0L), pkOk(t), td.fks.size, fkOk.getOrElse(t, 0))
     }
   }
 
-  /** Per-table readback counts + per-table FK-violation counts, unioned
-    * into TWO Spark jobs (one collect each) instead of 77 + 131
-    * sequential actions — same numbers, a fraction of the job-scheduling
-    * overhead. */
-  private def auditReadback(spark: SparkSession, url: String,
+  /** Per-table read-back counts + per-table FK-violation counts, asked of
+    * the database as ONE statement read through one `query` JDBC relation
+    * — one Spark job and one connection whatever the table and edge
+    * counts. The statement is a UNION ALL of a COUNT(*) branch per table
+    * (kind 0) and an orphan-count branch per FK edge (kind 1); an edge is
+    * audited only if its parent was deployed, and violations are summed
+    * per table. */
+  private[load] def auditReadback(spark: SparkSession, url: String,
       target: JdbcSink.Target, catalog: Catalog, targets: Seq[String])
       : (Map[String, Long], Map[String, Long]) = {
-    val frames = targets.map(t =>
-      t -> spark.read.jdbc(url, DerbyDdl.q(t), JdbcSink.props(target))).toMap
-
-    def labeled(t: String, df: DataFrame, as: String): DataFrame =
-      df.agg(count(lit(1)).as(as)).select(lit(t).as("table_name"), col(as))
-
-    val nReadback: Map[String, Long] =
-      targets.map(t => labeled(t, frames(t), "n"))
-        .reduceOption(_ unionAll _).map(_.collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap).getOrElse(Map.empty)
-
-    val fkBadPerEdge: Seq[DataFrame] = targets.flatMap { t =>
-      catalog(t).fks.filter(f => frames.contains(f.refTable)).map { f =>
-        labeled(t, frames(t).select(col(f.column)).filter(col(f.column).isNotNull)
-          .join(frames(f.refTable).select(col(f.refColumn).as(f.column)),
-            Seq(f.column), "left_anti"), "bad")
-      }
+    val deployed = targets.toSet
+    // every branch names its columns: Spark selects them by name
+    def branch(t: String, kind: Int) =
+      s"SELECT ${label(t)} AS TBL, $kind AS KIND, CAST(COUNT(*) AS BIGINT) AS N FROM ${DerbyDdl.q(t)}"
+    val branches = targets.map(branch(_, 0)) ++
+      targets.flatMap(t => catalog(t).fks.filter(f => deployed(f.refTable)).map(f =>
+        s"${branch(t, 1)} c WHERE ${orphanPredicate(catalog, f)}"))
+    if (branches.isEmpty) (Map.empty, Map.empty)
+    else {
+      val (counts, bad) = spark.read.format("jdbc")
+        .options(JdbcSink.props(target).asScala)
+        .option("url", url).option("query", branches.mkString("\nUNION ALL "))
+        .load().collect().partition(_.getInt(1) == 0)
+      (counts.map(r => r.getString(0) -> r.getLong(2)).toMap,
+        bad.groupMapReduce(_.getString(0))(_.getLong(2))(_ + _))
     }
-    // summed per table after the single collect (labels repeat per edge)
-    val fkBad: Map[String, Long] = fkBadPerEdge
-      .reduceOption(_ unionAll _).map(_.collect()
-        .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getLong(1)).sum })
-      .getOrElse(Map.empty)
-    (nReadback, fkBad)
+  }
+
+  /** A table name as a Derby string literal. The CAST matters: UNION ALL
+    * over bare literals of different lengths types them CHAR(n), and the
+    * shorter names come back blank-padded. */
+  private def label(t: String): String = s"CAST('${t.replace("'", "''")}' AS VARCHAR(256))"
+
+  /** The child rows (alias `c`) of edge `f` whose non-NULL FK value has no
+    * parent row — the left-anti semantics, with exact equality:
+    *  - string edges also compare LENGTH, because Derby compares strings
+    *    blank-padded ('AB' = 'AB ') where an exact match must not;
+    *  - an edge whose columns Derby cannot compare (different type
+    *    families, or a BLOB) would fail the whole statement; no value of
+    *    one family equals a value of another, so every non-NULL FK value
+    *    counts as a violation. */
+  private def orphanPredicate(catalog: Catalog, f: Fk): String = {
+    val (fk, pk) = (s"c.${DerbyDdl.q(f.column)}", s"p.${DerbyDdl.q(f.refColumn)}")
+    val family = DerbyDdl.compareFamily(catalog(f.table).schema(f.column))
+    val comparable = family.isDefined &&
+      family == DerbyDdl.compareFamily(catalog(f.refTable).schema(f.refColumn))
+    if (!comparable) s"$fk IS NOT NULL"
+    else {
+      val eq = if (family.contains("VARCHAR")) s"$pk = $fk AND LENGTH($pk) = LENGTH($fk)"
+        else s"$pk = $fk"
+      s"$fk IS NOT NULL AND NOT EXISTS (SELECT 1 FROM ${DerbyDdl.q(f.refTable)} p WHERE $eq)"
+    }
   }
 
   private def runArmedOn(spark: SparkSession, catalog: Catalog, url: String,
@@ -252,13 +275,11 @@ object JdbcRoundTrip {
       .zip(targets).foreach { case (err, t) =>
         err.foreach(e => sys.error(s"create $t failed: $e"))
       }
-    val pkArmed: Map[String, Boolean] = targets.map { t =>
-      t -> DerbyDdl.addPkSql(catalog(t)).map { sql =>
-        val r = JdbcSink.execute(target, Seq(sql)).head
-        r.foreach(e => sys.error(s"arm PK $t failed: $e"))
-        true
-      }.getOrElse(false)
-    }.toMap
+    val pkSql = targets.flatMap(t => DerbyDdl.addPkSql(catalog(t)).map(t -> _))
+    JdbcSink.execute(target, pkSql.map(_._2)).zip(pkSql).foreach { case (err, (t, _)) =>
+      err.foreach(e => sys.error(s"arm PK $t failed: $e"))
+    }
+    val pkArmed: Map[String, Boolean] = targets.map(t => t -> catalog(t).pk.nonEmpty).toMap
     val waveOf: Map[String, Int] =
       graft.deps.Deps.waves(targets, catalog.allFks).zipWithIndex
         .flatMap { case (ts, i) => ts.map(_ -> i) }.toMap
@@ -273,7 +294,7 @@ object JdbcRoundTrip {
     //  - parent in a STRICTLY earlier wave (a cycle-fallback or self-FK
     //    parent lands in the same wave, where the generator has no parent
     //    sample yet — arming such an edge would reject valid loads).
-    // Everything filtered here still gets the Spark-side left-anti audit.
+    // Everything filtered here is still counted by auditReadback.
     val targetSet = targets.toSet
     val armable: Map[String, Seq[graft.ddl.Fk]] = targets.map(t =>
       t -> catalog(t).fks.filter(fk =>
@@ -281,10 +302,10 @@ object JdbcRoundTrip {
           pkArmed.getOrElse(fk.refTable, false) &&
           catalog(fk.refTable).pk == Seq(fk.refColumn) &&
           waveOf.get(fk.refTable).exists(pw => waveOf.get(t).exists(pw < _)))).toMap
-    targets.foreach(t => armable(t).foreach { fk =>
-      JdbcSink.execute(target, Seq(DerbyDdl.addFkSql(fk))).head
-        .foreach(e => sys.error(s"arm FK ${fk.table}->${fk.refTable} failed: $e"))
-    })
+    val armedFks = targets.flatMap(armable)
+    JdbcSink.execute(target, armedFks.map(DerbyDdl.addFkSql)).zip(armedFks).foreach { case (err, fk) =>
+      err.foreach(e => sys.error(s"arm FK ${fk.table}->${fk.refTable} failed: $e"))
+    }
     val fkArmed: Map[String, Int] = targets.map(t => t -> armable(t).size).toMap
 
     // In-target edges the wave order CANNOT promise (self-FKs and
@@ -331,7 +352,8 @@ object JdbcRoundTrip {
     results.filterNot(_.ok).foreach(r =>
       sys.error(s"armed load ${r.table}: ${r.error.getOrElse("?")}"))
 
-    // Independent Spark-side audit on top of the DB's own enforcement.
+    // Read-back audit on top of the DB's own enforcement: it also counts
+    // the edges the armed posture could not constrain.
     val (nReadback, fkBad) = auditReadback(spark, url, target, catalog, targets)
     val loadReports = targets.sorted.map { t =>
       ArmedLoadReport(t, waveOf(t), rowCount, nReadback(t),

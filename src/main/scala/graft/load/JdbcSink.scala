@@ -2,6 +2,7 @@ package graft.load
 
 import java.sql.DriverManager
 import java.util.Properties
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
 
 /** Relational-database sink — SURVEY.md §2.1 K1 (batch append) + K4
@@ -41,13 +42,19 @@ object JdbcSink {
     p
   }
 
-  /** Run raw statements on a fresh driver-side connection (K2/K4-style;
-    * per-statement error tolerance like apply_mssql.py:94-102). */
+  /** Run raw statements in order over ONE fresh driver-side connection
+    * (K2/K4-style; per-statement error tolerance like
+    * apply_mssql.py:94-102): the connection stays in auto-commit, so a
+    * refused statement rolls back alone and the rest still run. Returns
+    * each statement's error message, None where it succeeded. */
   def execute(t: Target, statements: Seq[String]): Seq[Option[String]] = {
     val conn = DriverManager.getConnection(t.url, t.user, t.password)
     try statements.map { s =>
-      try { conn.createStatement().execute(s); None }
-      catch { case e: Throwable => Some(e.getMessage) }
+      try {
+        val st = conn.createStatement()
+        try st.execute(s) finally st.close()
+        None
+      } catch { case NonFatal(e) => Some(e.getMessage) }
     } finally conn.close()
   }
 

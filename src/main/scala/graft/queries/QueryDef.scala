@@ -8,6 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle equivalent DuckDB SQL over the same parquet tables
   *               (None for ops not expressible in portable SQL — those get
   *               the driver's weaker rows-only check plus ScalaTest specs).
+  *               Built on first use, not at registration: an oracle that
+  *               needs an input (g12's needs the DDL script) fails only
+  *               where it is read, never the registry's initialisation.
   * @param memo   true when repeat invocations serve a per-(session, dir)
   *               memoized / cross-run-artifact RESULT (or equivalently a
   *               one-shot stream execution) — i.e. the query's WARM bench
@@ -22,16 +25,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * derived floats go through exact decimal arithmetic and a single final
   * cast so both engines produce bit-identical values.
   */
-final case class QueryDef(
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    memo: Boolean = false)
+final class QueryDef(
+    val fn: (SparkSession, String) => DataFrame,
+    buildOracle: => Option[String],
+    val memo: Boolean) {
+  lazy val oracle: Option[String] = buildOracle
+
+  def withMemo(m: Boolean): QueryDef = new QueryDef(fn, oracle, m)
+}
 
 object QueryDef {
+  def apply(fn: (SparkSession, String) => DataFrame, oracle: => Option[String]): QueryDef =
+    new QueryDef(fn, oracle, false)
+
   def apply(fn: (SparkSession, String) => DataFrame, oracle: String): QueryDef =
-    QueryDef(fn, Some(oracle))
+    new QueryDef(fn, Some(oracle), false)
 
   def apply(fn: (SparkSession, String) => DataFrame, oracle: String,
       memo: Boolean): QueryDef =
-    QueryDef(fn, Some(oracle), memo)
+    new QueryDef(fn, Some(oracle), memo)
 }

@@ -22,6 +22,28 @@ class JdbcRoundTripSpec extends AnyFunSuite {
       cat.order.filter(keep))
   }
 
+  test("a uniqueidentifier column named after a sentence keyword loads (values cut to 36)") {
+    // RuleInference gives `AciklamaId` a sentence; Derby stores the
+    // column as VARCHAR(36) and would refuse any longer value
+    val one = DdlParser.parse(
+      """CREATE TABLE [dbo].[Belge](
+        |  [Id] [uniqueidentifier] NOT NULL,
+        |  [AciklamaId] [uniqueidentifier] NULL,
+        | CONSTRAINT [PK_Belge] PRIMARY KEY CLUSTERED
+        |(
+        |  [Id] ASC
+        |)WITH (PAD_INDEX = OFF) ON [PRIMARY]
+        |) ON [PRIMARY]
+        |GO
+        |""".stripMargin)
+    import org.apache.spark.sql.functions.{col, length, max}
+    val gen = graft.gen.Generator.tableDf(spark, one("Belge"), 200, 42)
+    assert(gen.agg(max(length(col("AciklamaId")))).head().getInt(0) <= 36)
+    val Seq(r) = JdbcRoundTrip.run(spark, one, rowCount = 200, seed = 42)
+    assert(r.table_name == "Belge" && r.n_loaded == 200 && r.n_readback == 200)
+    assert(r.pk_rearmed && r.n_fk_bad == 0)
+  }
+
   test("S9: database-existence probe + create-if-absent") {
     val url = s"jdbc:derby:memory:graft_s9_${System.nanoTime()}"
     assert(!JdbcRoundTrip.databaseExists(url), "fresh in-memory DB must not exist")
