@@ -37,12 +37,12 @@ object Bench {
     * measures scans; the per-family isolated cold column was the only
     * automated guard on those queries' BUILD paths. This pass grades
     * exactly the memo-served queries (SparkEntry.memoServed), calling
-    * Memos.clearAllKeepingSharedDeployments — the CacheHygieneSpec-
-    * enforced hook list, minus the g09/g10/g21 shared armed-deployment
-    * triple (round-19 brief #4: three readouts of ONE Derby lifetime;
-    * its build lands in g09, the first consumer in sorted order) —
-    * BEFORE each one, so every number is an uncached build (or, for
-    * g10/g21, a readout of the pass's shared deployment) in ONE
+    * Memo.clearAllKeepingSharedDeployments — every session memo, minus
+    * the g09/g10/g21 shared armed-deployment triple (round-19 brief #4:
+    * three readouts of ONE Derby lifetime; its build lands in g09, the
+    * first consumer in sorted order) — BEFORE each one, so every
+    * number is an uncached build (or, for g10/g21, a readout of the
+    * pass's shared deployment) in ONE
     * full-run record. tools/bench_cleared.sh runs it with
     * GRAFT_ARTIFACT_DIR pointed at a scratch dir, so cross-run
     * artifact-backed builds (s29/s31/s32, t67's postings, v43's index)
@@ -69,7 +69,7 @@ object Bench {
       // brief #4): g09/g10/g21 read one Derby lifetime — its build
       // cost lands in g09 (first consumer in sorted order), the same
       // attribution rule the un-wiped scratch artifact dir follows
-      Memos.clearAllKeepingSharedDeployments()
+      Memo.clearAllKeepingSharedDeployments()
       val t0 = System.nanoTime()
       val ok = try { q.fn(spark, sfDir).count(); true }
                catch { case _: Throwable => false }
@@ -385,7 +385,7 @@ object Bench {
       // line serves full-stdout consumers). Queries with no successful
       // pass are absent, same rule as the headline total.
       val pqJson = best.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + ms(v) }
+        .map { case (k, v) => "\"" + k + "\":" + ms(v) } // names: [A-Za-z0-9_]+ (SparkEntry.all)
         .mkString("{", ",", "}")
       println(s"""{"metric":"per_query","q":$pqJson,"cpus":$cpusJson,"unit":"sec","sf":"$sfDir"}""")
       // numOf is total: a name with no digits after the family char maps

@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 /** Shared SparkSession + teardown for the library's entry points
   * (Verify, Bench, TimeQ, Dump): one place for the load-bearing session
   * config — `nanosAsLong` is required to read the events fixture at all
-  * — and for the cache-release teardown, so a new entry point or a new
-  * module cache is one edit, not one per main. */
+  * — and for the memo-release teardown, so a new entry point is one edit,
+  * not one per main, and a new module memo is none. */
 object Harness {
+  /** Entries of Spark's compiled-codegen cache (see withSession). */
+  val CodegenCacheEntries = 4096
+
   def withSession[T](cpus: String, logLevel: String = "WARN")(body: SparkSession => T): T = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,10 +34,9 @@ object Harness {
       // cache changes NOTHING about plans or results — only whether a
       // repeat invocation recompiles. Driver-side memory, and the same
       // win on a production driver serving a large query surface;
-      // env-overridable for A/B (static conf: first session in the JVM
-      // owns it, which Harness already requires).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096"))
+      // static conf: the first session in the JVM owns it, which
+      // Harness already requires.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // AQE coalescing posture: MEASURED AND REJECTED (round 20) —
       // parallelismFirst=false + advisory 64m (Spark's doc-recommended
       // bytes-targeted coalescing, guide §2.2) read neutral on t+v in
@@ -43,13 +45,11 @@ object Harness {
       // neighbors tripled, 0.9 → 3.0 s) coalesce to ONE 64 MB-target
       // partition and serialize onto one core. At fixture scale
       // compute-per-byte dominates, exactly the case parallelismFirst
-      // exists for; the default (true) stands. Env knobs kept so a
-      // 100 TB deployment — where shuffles are IO-bound and the
-      // advisory size is the right dial — can flip it without a build.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_AQE_ADVISORY_BYTES", "64m"))
+      // exists for; the default (true) stands. A 100 TB deployment —
+      // where shuffles are IO-bound and the advisory size is the right
+      // dial — flips these two lines.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       // events fixture carries TIMESTAMP(NANOS) parquet timestamps; read
       // as raw longs and normalize in graft.tables.Tables.events
@@ -69,9 +69,8 @@ object Harness {
     finally {
       // cleanup must run even on a mid-run throw, or stream-snapshot
       // temp dirs and persisted plans leak for the JVM's lifetime
-      // (Memos.clearAll is the single maintained hook list —
-      // CacheHygieneSpec enforces its completeness)
-      Memos.clearAll()
+      // (every session memo is a graft.Memo, so one call drops them all)
+      Memo.clearAll()
       spark.stop()
     }
   }

@@ -21,7 +21,7 @@ object SparkEntry {
     * the moment a build was memoized).
     *
     * Audit criterion (checked against each fn's top level): the body is
-    * a getOrElseUpdate readout of a result-frame TrieMap (q52/t03/t16/
+    * a readout of a result-frame graft.Memo (q52/t03/t16/
     * t22/t34/t58/t62/v02/v38/m10/p04/the s-family one-shot streams), an
     * orderBy over such a memo (t02/t13/t42/m09), a liveMemo'd Derby
     * load (g07–g10/g13–g15/g18/g19/g21), a memoized write-then-read
@@ -68,6 +68,9 @@ object SparkEntry {
         SketchOps.defs ++ GraphOps.defs
     val unknown = memoServed.diff(raw.keySet)
     require(unknown.isEmpty, s"memoServed names not registered: $unknown")
+    // Bench writes the names unescaped as JSON keys
+    val unsafe = raw.keys.filterNot(_.matches("[A-Za-z0-9_]+"))
+    require(unsafe.isEmpty, s"query names must match [A-Za-z0-9_]+: $unsafe")
     raw.map { case (k, v) => k -> v.withMemo(memoServed(k)) }
   }
 

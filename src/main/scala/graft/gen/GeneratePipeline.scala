@@ -75,8 +75,10 @@ object GeneratePipeline {
               }
             (Result(t, rowCount, ok = true, None), keys.map(t -> _))
           } catch {
-            case e: Throwable =>
-              (Result(t, 0, ok = false, Some(e.getMessage)), None)
+            // toString, not getMessage: a message-less exception still
+            // records its class
+            case scala.util.control.NonFatal(e) =>
+              (Result(t, 0, ok = false, Some(e.toString)), None)
           }
         }
       }), Duration.Inf)

@@ -11,8 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               Built on first use, not at registration: an oracle that
   *               needs an input (g12's needs the DDL script) fails only
   *               where it is read, never the registry's initialisation.
-  * @param memo   true when repeat invocations serve a per-(session, dir)
-  *               memoized / cross-run-artifact RESULT (or equivalently a
+  * @param memo   true when repeat invocations serve a graft.Memo'd
+  *               (per session and dir) / cross-run-artifact RESULT (or a
   *               one-shot stream execution) — i.e. the query's WARM bench
   *               number measures a readout, not the pipeline. Bench emits
   *               the flag into bench_detail.json and tools/benchcmp.py

@@ -28,8 +28,8 @@ class VectorRebuildSpec extends AnyFunSuite {
     assert(pre == v34,
       "overlay serving state must equal the deletes-overlay logical index")
 
-    val (nCells, nRebuilt, nOverlay) = VectorOps.rebuildAudit.get((spark, d))
-      .getOrElse(fail("rebuild audit missing — v38 did not execute"))
+    // the audit memoized with the v38 execution above
+    val (nCells, nRebuilt, nOverlay) = VectorOps.rebuildAudit(spark, d)
     val trig = graft.SparkEntry.all("v36_ivf_compaction_trigger").fn(spark, d)
       .collect()
     assert(nCells == trig.count(_.getInt(5) == 1),

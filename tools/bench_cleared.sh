@@ -5,9 +5,9 @@
 # per-family isolated cold column, and for cross-run-artifact and
 # Derby-lifetime queries even the cold is a read (round-16 advice).
 # This runs graft.Bench with GRAFT_CLEARED_PASS=1 —
-# Memos.clearAllKeepingSharedDeployments (the CacheHygieneSpec-enforced
-# hook list, minus the g09/g10/g21 shared armed-deployment triple,
-# which is pass-scoped like the scratch artifact dir) before EVERY
+# Memo.clearAllKeepingSharedDeployments (every session memo, minus the
+# g09/g10/g21 shared armed-deployment triple, which is pass-scoped like
+# the scratch artifact dir) before EVERY
 # memo-served query — and GRAFT_ARTIFACT_DIR on a scratch dir so
 # artifact-backed builds actually rebuild. Every number in the record
 # is an uncached build, except g10/g21 which read the pass's shared
@@ -42,7 +42,7 @@ import json, sys
 rec = json.load(open(sys.argv[1]))
 rec["src_hash"] = sys.argv[2]
 rec["mode"] = ("cleared-memo-fullrun (tools/bench_cleared.sh): "
-               "Memos.clearAllKeepingSharedDeployments before each memo-served "
+               "Memo.clearAllKeepingSharedDeployments before each memo-served "
                "query and GRAFT_ARTIFACT_DIR on a scratch dir, so every number "
                "is an uncached BUILD - except g10/g21, which read the pass's "
                "shared armed deployment (round 19; built in g09). A shared "

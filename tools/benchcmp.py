@@ -26,7 +26,7 @@ pipelines never re-triggers here. Those build paths are gated by the
 --cleared lane below, whose recording forces rebuilds.
 
 --cleared: per-query BUILD compare of a fresh cleared-memo record
-(tools/bench_cleared.sh: Memos.clearAll() before every memo-served
+(tools/bench_cleared.sh: Memo.clearAllKeepingSharedDeployments() before every memo-served
 query, GRAFT_ARTIFACT_DIR on a scratch dir so artifact-backed builds
 actually rebuild) against the bench_cleared.json committed at HEAD —
 the forced-rebuild lane that closes the --cold scope gap. Same RED /

@@ -5,7 +5,9 @@ FK columns are offset by the REFERENCED table's stride so the replicas
 are K referentially-consistent copies of the sf0.1 universe. This is
 measurement-only data (never graded): /root/testdata stays read-only
 and the driver's SFs are untouched. Schema preserved byte-for-byte by
-pyarrow (events.ts stays whatever timestamp flavor the source carries).
+pyarrow (events.ts stays whatever timestamp flavor the source carries),
+except that integer key columns narrower than int64 widen to int64 so
+the offsets cannot overflow.
 
 Usage: python3 tools/make_bigsf.py [K] [src] [dst]
 Defaults: K=5, src=/root/testdata/sf0.1, dst=/root/bigsf/sf0.5
@@ -51,9 +53,13 @@ def gen(name, keys):
         p = t
         for c in keys:
             idx = p.schema.get_field_index(c)
-            arr = pc.add(p.column(idx),
-                         pa.scalar(steps[c] * i, type=p.schema.field(idx).type))
-            p = p.set_column(idx, p.schema.field(idx), arr)
+            field, col = p.schema.field(idx), p.column(idx)
+            # widen integer keys first: steps[c] * i can exceed int32
+            # at large K, and int32 addition would wrap silently
+            if pa.types.is_integer(field.type) and field.type != pa.int64():
+                field, col = field.with_type(pa.int64()), col.cast(pa.int64())
+            arr = pc.add_checked(col, pa.scalar(steps[c] * i, type=field.type))
+            p = p.set_column(idx, field, arr)
         parts.append(p)
     out = pa.concat_tables(parts)
     pq.write_table(out, f"{DST}/{name}.parquet")
