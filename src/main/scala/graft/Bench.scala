@@ -27,6 +27,17 @@ object Bench {
     calibProbe(spark)
     scala.collection.mutable.Buffer(calibProbe(spark))
   }
+
+  /** One graded pass: true when `run` completes. A throw is a failed
+    * pass, counted, never timed — and its reason goes to stderr, since
+    * stdout carries only the machine-read JSON records. */
+  private def countOk(name: String, run: => Long): Boolean =
+    try { run; true }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: $e")
+      false
+    }
+
   private def calibJson(samples: Seq[Double]): String =
     samples.map(v => String.format(java.util.Locale.ROOT, "%.3f", v))
       .mkString("[", ",", "]")
@@ -71,8 +82,7 @@ object Bench {
       // attribution rule the un-wiped scratch artifact dir follows
       Memo.clearAllKeepingSharedDeployments()
       val t0 = System.nanoTime()
-      val ok = try { q.fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+      val ok = countOk(name, q.fn(spark, sfDir).count())
       val t = (System.nanoTime() - t0) / 1e9
       name -> (t, ok)
     }
@@ -202,11 +212,10 @@ object Bench {
       val families = SparkEntry.queries.toSeq
         .filter(kv => famFilter.forall(_.contains(kv._1.take(1))))
         .sortBy(_._1).groupBy(_._1.take(1)).toSeq.sortBy(_._1)
-      def time(fn: (org.apache.spark.sql.SparkSession, String) =>
+      def time(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
           org.apache.spark.sql.DataFrame): (Double, Boolean) = {
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+        val ok = countOk(name, fn(spark, sfDir).count())
         ((System.nanoTime() - t0) / 1e9, ok)
       }
       // Per-family probe brackets (round-19 verdict #2): the full-run
@@ -226,8 +235,8 @@ object Bench {
         val w = scala.collection.mutable.Map.empty[String, (Double, Boolean)]
         families.zipWithIndex.foreach { case ((_, qs), fi) =>
           if (fi > 0) { val v = calibProbe(spark); calib += v; famProbes += v }
-          qs.foreach { case (name, fn) => c(name) = time(fn) }
-          qs.foreach { case (name, fn) => w(name) = time(fn) }
+          qs.foreach { case (name, fn) => c(name) = time(name, fn) }
+          qs.foreach { case (name, fn) => w(name) = time(name, fn) }
           // Targeted third sample for NOISE SUSPECTS only, while the
           // family's caches are still hot: on this shared microVM a warm
           // pass can land 3× over the cold one on an identical frozen
@@ -282,7 +291,7 @@ object Bench {
                 }
               if (crossRound && !contentionSuspect) crossLeft -= 1
               if (contentionSuspect || crossRound) {
-                val (t3, ok3) = time(fn)
+                val (t3, ok3) = time(name, fn)
                 if (ok3) w(name) = (math.min(wv, t3), true)
               }
             }

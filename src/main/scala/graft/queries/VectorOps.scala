@@ -47,8 +47,17 @@ object VectorOps {
     graft.functions.VectorExpressions.dot_d(col(a), col(b))
 
   /** Brute-force cosine top-10 for query vectors vec_id < 10. */
-  def cosineTopK(s: SparkSession, d: String): DataFrame = {
-    val base = vecs(s, d)
+  def cosineTopK(s: SparkSession, d: String): DataFrame =
+    exactTopK(vecs(s, d), 10).orderBy("q_id", "rk")
+
+  /** THE exact baseline (q_id, rk, hit_id, cos), unordered: every query
+    * vector (vec_id < 10) against the whole corpus, a broadcast query
+    * side over one map-only scan, top-k per query by rounded cosine with
+    * the hit id as tiebreaker. v01 orders it for output; every recall
+    * query grades against its top 5. `base` is the caller's own
+    * [[vecs]] frame (vec_id, v, nrm, …): each `vecs` call re-reads the
+    * fixture's parquet footer before any job runs. */
+  private def exactTopK(base: DataFrame, k: Int): DataFrame = {
     val q = base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
     base.join(broadcast(q), col("q_id") =!= col("vec_id"))
@@ -56,9 +65,42 @@ object VectorOps {
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("q_id")
           .orderBy(col("cos").desc, col("vec_id").asc)))
-      .filter(col("rk") <= 10)
+      .filter(col("rk") <= k)
       .select(col("q_id"), col("rk"), col("vec_id").as("hit_id"), col("cos"))
-      .orderBy("q_id", "rk")
+  }
+
+  /** The recall readout every curve query shares. `cand` holds scored
+    * candidates (point, q_id, hit_id, score) for every curve point at
+    * once, so ONE window ranks per (point, q_id) by score desc, hit_id
+    * asc; the top 5 join the exact baseline and hits count per point.
+    * Every row of `points` (keyed by `point`) comes back with n_hits — 0
+    * where the candidates all missed, a row either way — and n_exact,
+    * the baseline's row count, so a recall denominator is derived, never
+    * a literal (a query with fewer than 5 eligible neighbours would
+    * otherwise misstate recall). The baseline (|queries|·5 rows) and the
+    * per-point hits (|points| rows) broadcast, so neither join shuffles;
+    * n_exact is a scalar subquery, which a caller with its own
+    * denominator (v37/v40) never runs.
+    *
+    * Why the curves expand a parameter frame into `cand` instead of
+    * running one plan per point: each point's candidates are a filter of
+    * ONE shared candidate pass (nested probe/shortlist sets, cut or
+    * codebook prefixes, dim prefixes), so the corpus-side join and the
+    * scores compute once and a small broadcast of parameter values fans
+    * them out; with (q_id, hit_id) unique per point, the hit join counts
+    * exactly what a per-point semi-join would. */
+  private[queries] def recallReadout(cand: DataFrame, point: String, score: String,
+      points: DataFrame, exact: DataFrame): DataFrame = {
+    val truth = exact.select("q_id", "hit_id")
+    val hits = cand.withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(point, "q_id")
+          .orderBy(col(score).desc, col("hit_id").asc)))
+      .filter(col("rk") <= 5)
+      .join(broadcast(truth), Seq("q_id", "hit_id"))
+      .groupBy(point).agg(count(lit(1)).as("n_hits"))
+    points.join(broadcast(hits), Seq(point), "left")
+      .na.fill(0L, Seq("n_hits"))
+      .withColumn("n_exact", truth.agg(count(lit(1))).scalar())
   }
 
   /** All near-duplicate pairs with cosine ≥ 0.45 (fixture max ≈ 0.51).
@@ -303,12 +345,43 @@ object VectorOps {
         when(col("n_dup_prior") === 0, 1L).otherwise(0L))
       .orderBy("vec_id")
 
-  /** Every vector's centroid cell — the crn = 1 slice of the routing
-    * artifact, the ONE cell-assignment definition v15/v29/v39 and the
-    * cell pair frame share. */
+  /** Every vector's centroid cell (vec_id, cell) — the crn = 1 slice of
+    * the routing artifact and the ONE cell-assignment definition: every
+    * IVF search, overlay, curve and the cell pair frame route through
+    * it. Its text is part of the ann_index fold-tag region
+    * ([[AnnIndexFoldTag]]), so it stays exactly as written. */
   private[queries] def cellAssignments(s: SparkSession, d: String): DataFrame =
     centroidAffinity(s, d).filter(col("crn") === 1)
       .select(col("vec_id"), col("cid").as("cell"))
+
+  /** The query side of the routing artifact (q_id, pcell, pr): each
+    * query vector's (vec_id < 10) n nearest cells, pr being the cell's
+    * rank in the query's probe list. A vector lives in one cell and a
+    * query's probe cells are distinct, so a candidate's pr is unique —
+    * the n = 1..N candidate sets are nested, which is what lets one
+    * pass at the largest n serve a whole probe curve. */
+  private def queryProbes(s: SparkSession, d: String, n: Int): DataFrame =
+    centroidAffinity(s, d).filter(col("vec_id") < 10 && col("crn") <= n)
+      .select(col("vec_id").as("q_id"), col("cid").as("pcell"), col("crn").as("pr"))
+
+  /** Every (query, vector) pair that meets in one of the query's
+    * `nProbes` probed cells, scored: (q_id, pr, hit_id, cos) — the
+    * candidate pass v08's search and its overlays, and the v21/v37/v40
+    * curves share. `cells` is the (vec_id, cell) index being served
+    * (the artifact slice or an overlay of it) and `e` the corpus
+    * (vec_id, v, nrm). The probe × query frame
+    * is |queries|·nProbes rows, so it broadcasts at any corpus size;
+    * candidates meet only inside cells, never all-pairs. */
+  private def probedCandidates(s: SparkSession, d: String, e: DataFrame,
+      cells: DataFrame, nProbes: Int): DataFrame = {
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+      .join(queryProbes(s, d, nProbes), "q_id")
+    e.join(cells, "vec_id")
+      .join(broadcast(q), col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("pr"), col("vec_id").as("hit_id"),
+        round(dot("qv", "v") / (col("qn") * col("nrm")), 6).as("cos"))
+  }
 
   /** The within-cell candidate pair frame behind the SEMANTIC dedup
     * family (v15's dedup, v29's threshold curve, t15's embedding
@@ -549,36 +622,24 @@ object VectorOps {
     * only their 2 nearest cells. At 100 TB the cell is the storage
     * partition: a query touches 2/16ths of the data, and the codebook is
     * a broadcast. Exact ranking inside the probed cells. */
-  def ivfTopK(s: SparkSession, d: String): DataFrame = {
-    val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    ivfSearchOn(e, aff, cells)
-  }
+  def ivfTopK(s: SparkSession, d: String): DataFrame =
+    ivfSearchOn(s, d, vecs(s, d), cellAssignments(s, d))
 
-  /** THE 2-probe search tail v08/v34/v35 share (probes + query build,
-    * cell equi-join, exact cosine rerank, top-5) — only the `cells`
-    * frame differs between the full index and its delete/insert
-    * overlays, so a tie-break or rounding change here reaches all
-    * three and the overlays' result-invisibility contracts
+  /** THE 2-probe search tail v08/v34/v35/v38 share (probed candidates,
+    * exact cosine rerank, top-5) — only the `cells` frame differs
+    * between the full index and its delete/insert overlays, so a
+    * tie-break or rounding change here reaches all of them and the
+    * overlays' result-invisibility contracts
     * (VectorDeleteSpec/VectorInsertSpec) cannot silently drift. */
-  private def ivfSearchOn(e: DataFrame, aff: DataFrame, cells: DataFrame): DataFrame = {
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      .join(probes, "q_id")
-    e.join(cells, "vec_id")
-      .join(broadcast(q), col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
+  private def ivfSearchOn(s: SparkSession, d: String, e: DataFrame,
+      cells: DataFrame): DataFrame =
+    probedCandidates(s, d, e, cells, 2)
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("vec_id").asc)))
+          .orderBy(col("cos").desc, col("hit_id").asc)))
       .filter(col("rk") <= 5)
-      .select(col("q_id"), col("rk"), col("vec_id").as("hit_id"), col("cos"))
+      .select(col("q_id"), col("rk"), col("hit_id"), col("cos"))
       .orderBy("q_id", "rk")
-  }
 
   /** v34 — IVF with a DELETION OVERLAY: v08's 2-probe search over an
     * index that has tombstoned vectors (vec_id ≡ 0 mod 7 — the same
@@ -601,12 +662,10 @@ object VectorOps {
     * query side is external to the index. */
   def ivfTopKWithDeletes(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
     val tomb = e.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
+    val cells = cellAssignments(s, d)
       .join(tomb, Seq("vec_id"), "left_anti") // the overlay — index untouched
-    ivfSearchOn(e, aff, cells)
+    ivfSearchOn(s, d, e, cells)
   }
 
   /** v35 — IVF with an INSERT overlay, v34's complement: the newest 10%
@@ -634,6 +693,13 @@ object VectorOps {
   private def insertCut(e: DataFrame): DataFrame =
     broadcast(e.agg((max(col("vec_id")) * 9 / 10).cast("long").as("cut")))
 
+  /** The deployed artifact's cells at or below the build cutoff
+    * (vec_id, cell) — the indexed base v35 serves, v36 accounts for and
+    * v38 rebuilds. */
+  private def indexedCells(s: SparkSession, d: String, cut: DataFrame): DataFrame =
+    cellAssignments(s, d).crossJoin(cut).filter(col("vec_id") <= col("cut"))
+      .select("vec_id", "cell")
+
   /** v35's live-assignment rule for the not-yet-indexed slice (vec_id >
     * cut): nearest centroid by rounded cosine against the broadcast
     * 16-row centroid frame, ties to the lower cid. ONE definition, same
@@ -656,19 +722,15 @@ object VectorOps {
 
   def ivfTopKWithInserts(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
     val cut = insertCut(e)
     // base: the deployed artifact, minus the not-yet-indexed slice —
     // the 1-row cut frame cross-joins straight onto the artifact rows
     // (an equi-join back through the embedding table would shuffle two
     // corpus-scale frames just to attach one broadcast scalar)
-    val baseCells = aff.filter(col("crn") === 1)
-      .crossJoin(cut)
-      .filter(col("vec_id") <= col("cut"))
-      .select(col("vec_id"), col("cid").as("cell"))
+    val baseCells = indexedCells(s, d, cut)
     // delta: fresh assignments for the new slice — same centroids, same
     // rule, computed live
-    ivfSearchOn(e, aff, baseCells.unionByName(deltaAssignments(e, cut)))
+    ivfSearchOn(s, d, e, baseCells.unionByName(deltaAssignments(e, cut)))
   }
 
   /** Read-amplification threshold for v36, in permille: a cell whose
@@ -700,11 +762,9 @@ object VectorOps {
     * policies are exactly this decision on exactly this accounting. */
   def ivfCompactionTrigger(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
     val cut = insertCut(e)
-    val art = aff.filter(col("crn") === 1).crossJoin(cut)
-      .filter(col("vec_id") <= col("cut"))
-      .groupBy(col("cid").as("cell"))
+    val art = indexedCells(s, d, cut)
+      .groupBy("cell")
       .agg(count(lit(1)).as("base_rows"),
         sum(when(pmod(col("vec_id"), lit(7)) === 0, 1L).otherwise(0L))
           .as("tomb_rows"))
@@ -761,15 +821,11 @@ object VectorOps {
       val root = java.nio.file.Files.createTempDirectory("graft_ivfreb")
       try {
         val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-        val aff = centroidAffinity(s, d)
         val cut = insertCut(e)
         val tomb = e.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")
         // the overlay serving state: deployed artifact rows below the
         // build cutoff tombstone-filtered at read, arrivals live-routed
-        val baseCells = aff.filter(col("crn") === 1).crossJoin(cut)
-          .filter(col("vec_id") <= col("cut"))
-          .select(col("vec_id"), col("cid").as("cell"))
-        val preCells = baseCells.unionByName(deltaAssignments(e, cut))
+        val preCells = indexedCells(s, d, cut).unionByName(deltaAssignments(e, cut))
           .join(tomb, Seq("vec_id"), "left_anti")
         val trig = ivfCompactionTrigger(s, d)
           .filter(col("compact") === 1).select("cell")
@@ -783,7 +839,7 @@ object VectorOps {
         val untrig = preCells.join(broadcast(trig), Seq("cell"), "left_anti")
         val audit = (trig.count(), rebuilt.count(), untrig.count())
         def search(cells: DataFrame, phase: String) =
-          ivfSearchOn(e, aff, cells).withColumn("phase", lit(phase))
+          ivfSearchOn(s, d, e, cells).withColumn("phase", lit(phase))
             .select("phase", "q_id", "rk", "hit_id", "cos")
         (search(preCells, "1_pre_rebuild")
           .unionByName(search(rebuilt.unionByName(untrig), "2_post_rebuild"))
@@ -816,41 +872,16 @@ object VectorOps {
     * is |queries|·|corpus| map-only with a broadcast query side — the
     * calibration cost every recall audit pays by definition. */
   def ivfProbeRecallCurve(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id").asc)))
-      .filter(col("rk") <= 5)
-      .select(col("q_id"), col("vec_id").as("hit_id"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 4)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"), col("crn").as("pr"))
-    val cand = e.join(cells, "vec_id")
-      .join(broadcast(probes.join(q, "q_id")),
-        col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
-      .select(col("q_id"), col("pr"), col("vec_id").as("hit_id"), col("cos"))
+    val e = vecs(s, d)
+    val cand = probedCandidates(s, d, e, cellAssignments(s, d), 4)
       .localCheckpoint() // feeds the expansion AND its own stats twice
     val byP = cand.join(
       broadcast(s.range(1, 5).select(col("id").cast("int").as("n_probes"))),
       col("pr") <= col("n_probes"))
-    val hits = byP.withColumn("rk", row_number().over(
-        Window.partitionBy("q_id", "n_probes")
-          .orderBy(col("cos").desc, col("hit_id").asc)))
-      .filter(col("rk") <= 5)
-      .join(exact, Seq("q_id", "hit_id"))
-      .groupBy("n_probes").agg(count(lit(1)).as("n_hits"))
-    byP.groupBy("n_probes")
+    val stats = byP.groupBy("n_probes")
       .agg(countDistinct("q_id").as("n_queries"),
         count(lit(1)).as("n_candidates"))
-      .join(hits, Seq("n_probes"), "left")
-      .na.fill(0L, Seq("n_hits"))
+    recallReadout(byP, "n_probes", "cos", stats, exactTopK(e, 5))
       .withColumn("recall_permille",
         expr("case when n_queries = 0 then cast(-1 as bigint) " +
           "else n_hits * 1000 div (5 * n_queries) end"))
@@ -873,49 +904,24 @@ object VectorOps {
     * monotone climb and the v37 cross-lock: the 100 % row equals the
     * probe curve's n_probes = 2 row by construction).
     *
-    * One plan, not four (v37's expansion discipline): the 2-probe
-    * candidate set computes ONCE over the full corpus, a 4-row
-    * broadcast of data-derived cuts filters it per staleness point, and
-    * ONE window ranks per (cut, query). Exact integer readout. */
+    * The 2-probe candidate set computes ONCE over the full corpus, and
+    * a 4-row broadcast of data-derived cuts filters it per staleness
+    * point ([[recallReadout]]). Exact integer readout. */
   def ivfStalenessCurve(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id").asc)))
-      .filter(col("rk") <= 5)
-      .select(col("q_id"), col("vec_id").as("hit_id"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
-    val cand = e.join(cells, "vec_id")
-      .join(broadcast(probes.join(q, "q_id")),
-        col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
-      .select(col("q_id"), col("vec_id").as("hit_id"), col("cos"))
+    val e = vecs(s, d)
+    val cand = probedCandidates(s, d, e, cellAssignments(s, d), 2)
+      .select("q_id", "hit_id", "cos")
       .localCheckpoint() // feeds the expansion AND its own stats
     val cuts = broadcast(Seq(70L, 80L, 90L, 100L).toDF("pct")
       .crossJoin(broadcast(e.agg(max("vec_id").as("mx"))))
       .withColumn("cut", expr("mx * pct div 100"))
       .select("pct", "cut"))
     val byCut = cand.crossJoin(cuts).filter(col("hit_id") <= col("cut"))
-    val hits = byCut.withColumn("rk", row_number().over(
-        Window.partitionBy("pct", "q_id")
-          .orderBy(col("cos").desc, col("hit_id").asc)))
-      .filter(col("rk") <= 5)
-      .join(exact, Seq("q_id", "hit_id"))
-      .groupBy("pct").agg(count(lit(1)).as("n_hits"))
-    byCut.groupBy("pct")
+    val stats = byCut.groupBy("pct")
       .agg(countDistinct("q_id").as("n_queries"),
         count(lit(1)).as("n_candidates"))
-      .join(hits, Seq("pct"), "left")
-      .na.fill(0L, Seq("n_hits"))
+    recallReadout(byCut, "pct", "cos", stats, exactTopK(e, 5))
       .withColumn("recall_permille",
         expr("case when n_queries = 0 then cast(-1 as bigint) " +
           "else n_hits * 1000 div (5 * n_queries) end"))
@@ -943,16 +949,11 @@ object VectorOps {
     * ranking on the shared rounded-cosine grid — deterministic. */
   def filteredAnn(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d).select(col("vec_id"), col("label"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
-    val base = e.join(cells, "vec_id")
+    val base = e.join(cellAssignments(s, d), "vec_id")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("v").as("qv"), col("nrm").as("qn"))
-      .join(probes, "q_id")
+      .join(queryProbes(s, d, 2), "q_id")
     val byQ = org.apache.spark.sql.expressions.Window.partitionBy("q_id")
     val cand = base.join(broadcast(q),
         col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
@@ -992,16 +993,10 @@ object VectorOps {
   }
 
   private val FilteredAnnDuck: String =
-    """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-      |aff AS (SELECT e.vec_id, c.cid,
-      |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |      ORDER BY round(list_dot_product(e.v, c.cv) /
-      |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-      |        c.cid ASC) AS crn
-      |  FROM e, c),
-      |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-      |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+    s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+      |$AffDuck,
+      |$CellsDuck,
+      |$ProbesDuck,
       |cand AS (SELECT pr.q_id, q.label AS q_label, b.vec_id, b.label,
       |    round(list_dot_product(q.v, b.v) /
       |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos,
@@ -1069,16 +1064,11 @@ object VectorOps {
     * with the broadcast dropped — both sides partition on cell. */
   def hardNegativeMining(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d).select(col("vec_id"), col("label"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
-    val base = e.join(cells, "vec_id")
+    val base = e.join(cellAssignments(s, d), "vec_id")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("v").as("qv"), col("nrm").as("qn"))
-      .join(probes, "q_id")
+      .join(queryProbes(s, d, 2), "q_id")
     val byQ = org.apache.spark.sql.expressions.Window.partitionBy("q_id")
     val cand = base.join(broadcast(q),
         col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
@@ -1102,15 +1092,9 @@ object VectorOps {
 
   private val HardNegativeDuck: String =
     s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-      |aff AS (SELECT e.vec_id, c.cid,
-      |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |      ORDER BY round(list_dot_product(e.v, c.cv) /
-      |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-      |        c.cid ASC) AS crn
-      |  FROM e, c),
-      |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-      |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+      |$AffDuck,
+      |$CellsDuck,
+      |$ProbesDuck,
       |cand AS (SELECT pr.q_id, q.label AS q_label, b.vec_id, b.label,
       |    round(list_dot_product(q.v, b.v) /
       |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
@@ -1191,20 +1175,17 @@ object VectorOps {
   def cellBalancedSample(s: SparkSession, d: String): DataFrame = {
     // the assignment feeds BOTH the size audit and the tournament —
     // materialize it once (it IS the IVF index a deployment persists)
-    val cells = ivfCells(s, d).localCheckpoint()
+    // the crn = 1 affinity rows carry the vector's cosine to its own
+    // centroid, the tournament's ranking key
+    val cells = centroidAffinity(s, d).select(col("vec_id"), col("cid").as("cell"), col("ccos"))
+      .join(cellAssignments(s, d), Seq("vec_id", "cell"))
+      .localCheckpoint()
     val sz = cells.groupBy("cell").agg(count(lit(1)).as("cell_sz"))
     tournamentTopK(cells, 8)
       .join(broadcast(sz), "cell")
       .select(col("cell"), col("rk"), col("vec_id"), col("ccos"), col("cell_sz"))
       .orderBy("cell", "rk")
   }
-
-  /** The v08/v11 cell assignment as a reusable frame: (vec_id, cell,
-    * ccos) — nearest of the 16 seed centroids, rounded-cosine + cid-asc
-    * tie-break. */
-  private[queries] def ivfCells(s: SparkSession, d: String): DataFrame =
-    centroidAffinity(s, d).filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"), col("ccos"))
 
   /** Exact per-cell top-k over a (vec_id, cell, ccos) frame via the
     * salted two-level tournament (containment proof in
@@ -1395,11 +1376,6 @@ object VectorOps {
     ivfPqTopKOn(s, d, pqCandOpq(s, d))
 
   private def ivfPqTopKOn(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
     val enc = cand
       .groupBy("vec_id", "m").agg(min(struct(col("d2"), col("j"))).as("best"))
       .select(col("vec_id"), col("m"), col("best.j").as("code"))
@@ -1407,8 +1383,8 @@ object VectorOps {
     // = 10,240 rows at ANY corpus size: broadcast structurally justified
     val plut = cand.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("m").as("lm"), col("j"), col("ip").as("qip"))
-      .join(probes, "q_id")
-    enc.join(cells, "vec_id")
+      .join(queryProbes(s, d, 2), "q_id")
+    enc.join(cellAssignments(s, d), "vec_id")
       .join(broadcast(plut),
         col("m") === col("lm") && col("cell") === col("pcell") &&
           col("code") === col("j"))
@@ -1466,8 +1442,6 @@ object VectorOps {
     // probes come from the deployed router artifact (the coarse half of
     // the same index family); the LUT quantizes ONLY ids < 64 — the
     // codebook rows plus the 10 queries — behind a pushed-down filter
-    val probes = centroidAffinity(s, d).filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
     val eq = embeddings(s, d).filter(col("vec_id") < 64).withColumn("qv",
       expr("transform(embedding, x -> cast(floor(cast(x AS double) * 200.0D) AS double))"))
     val sub = eq.select(col("vec_id"), explode(expr("sequence(0, 7)")).as("m"), col("qv"))
@@ -1478,7 +1452,7 @@ object VectorOps {
       .join(cb, "m")
       .select(col("q_id"), col("m").as("lm"), col("j"),
         dot("sv", "cv").cast("long").as("qip"))
-      .join(probes, "q_id")
+      .join(queryProbes(s, d, 2), "q_id")
     idx.join(broadcast(plut),
         col("m") === col("lm") && col("cell") === col("pcell") &&
           col("code") === col("j"))
@@ -1836,11 +1810,7 @@ object VectorOps {
     * 2,560 rows at any corpus size. */
   def ivfPqResidualTopK(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
+    val cells = cellAssignments(s, d)
     val eq = embeddings(s, d).withColumn("qv",
       expr("transform(embedding, x -> cast(floor(cast(x AS double) * 200.0D) AS double))"))
     val cq = eq.filter(col("vec_id") < 16)
@@ -1890,7 +1860,7 @@ object VectorOps {
     // query side: RAW quantized query (IP metric never residualizes the
     // query) — LUT term <q_m, cw> plus the per-probed-cell <q, c>
     val q = eq.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"), col("qv"))
-    val qcell = q.join(probes, "q_id")
+    val qcell = q.join(queryProbes(s, d, 2), "q_id")
       .join(broadcast(cq), col("pcell") === col("cid"))
       .withColumn("ipcell",
         graft.functions.VectorExpressions.dot_d(col("qv"), col("cqv")).cast("long"))
@@ -1928,8 +1898,7 @@ object VectorOps {
     * own scale shapes (broadcast queries / probed-cell pruning), and
     * the comparison join is |queries|×5 rows. */
   def ivfRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = cosineTopK(s, d).filter(col("rk") <= 5)
-      .select(col("q_id"), col("hit_id"))
+    val exact = exactTopK(vecs(s, d), 5).select(col("q_id"), col("hit_id"))
     val approx = ivfTopK(s, d)
       .select(col("q_id").as("aq"), col("hit_id").as("a_hit"))
     exact.join(approx,
@@ -1950,17 +1919,13 @@ object VectorOps {
     * rungs cost ONE corpus scan fanned out by a 3-row broadcast — the
     * encode argmin per rung is the same map-side min(struct) partial
     * agg, and recall joins each rung's top-5 against the v01 exact
-    * baseline on (q_id, hit_id), a |K-rungs|·|queries|·5-row frame.
+    * baseline on (q_id, hit_id), a |K-rungs|·|queries|·5-row frame, over
+    * the baseline's own row count (the v21 rule).
     * This is v21's nprobe-curve discipline applied to the codebook
     * dial: the size/accuracy trade-off an operator reads before
     * committing codebook bits at 100 TB, as an oracle-checked table. */
   def ivfPqCodebookCurve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val aff = centroidAffinity(s, d)
-    val cells = aff.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
     val cand = pqCand64(s, d)
     val ks = Seq(16, 32, 64).toDF("kk")
     val enc = cand.crossJoin(broadcast(ks)).filter(col("j") < col("kk"))
@@ -1968,26 +1933,17 @@ object VectorOps {
       .select(col("kk"), col("vec_id"), col("m"), col("best.j").as("code"))
     val plut = cand.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("m").as("lm"), col("j"), col("ip").as("qip"))
-      .join(probes, "q_id")
-    val top5 = enc.join(cells, "vec_id")
+      .join(queryProbes(s, d, 2), "q_id")
+    val scored = enc.join(cellAssignments(s, d), "vec_id")
       .join(broadcast(plut),
         col("m") === col("lm") && col("cell") === col("pcell") &&
           col("code") === col("j"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy("kk", "q_id", "vec_id").agg(sum(col("qip")).as("ascore"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("kk", "q_id")
-          .orderBy(col("ascore").desc, col("vec_id").asc)))
-      .filter(col("rk") <= 5)
-    val exact = cosineTopK(s, d).filter(col("rk") <= 5)
-      .select(col("q_id").as("eq"), col("hit_id").as("ehit"))
-    val hitCounts = top5.join(exact,
-        col("q_id") === col("eq") && col("vec_id") === col("ehit"))
-      .groupBy("kk").agg(count(lit(1)).as("n_hits"))
-    ks.join(hitCounts, Seq("kk"), "left")
-      .select(col("kk").as("n_codewords"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 50.0, 6).as("recall"))
+      .withColumnRenamed("vec_id", "hit_id")
+    recallReadout(scored, "kk", "ascore", ks, exactTopK(vecs(s, d), 5))
+      .select(col("kk").as("n_codewords"), col("n_hits"),
+        round(col("n_hits").cast("double") / col("n_exact"), 6).as("recall"))
       .orderBy("n_codewords")
   }
 
@@ -2086,52 +2042,17 @@ object VectorOps {
     * point. The exact baseline comes from the v01 path with its own
     * plan intact. */
   def ivfProbeCurve(s: SparkSession, d: String): DataFrame = {
-    val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-    val aff = centroidAffinity(s, d).select("vec_id", "cid", "crn")
-    val cells = aff.filter(col("crn") === 1).select(col("vec_id"), col("cid").as("cell"))
-    val base = e.join(cells, "vec_id")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = cosineTopK(s, d).filter(col("rk") <= 5)
-      .select(col("q_id"), col("hit_id"))
-    // recall denominator DERIVED from the exact baseline (1-row scalar
-    // broadcast), never a hard-coded |queries|×5: a query with fewer
-    // than 5 eligible neighbors would silently misstate recall if the
-    // constant and the data ever disagreed (round-6 advice)
-    val exn = exact.agg(count(lit(1)).as("n_exact"))
-    // One plan, not three (v37's expansion discipline, round-20's named
-    // lever): candidates at nprobe=1/2 are SUBSETS of the nprobe=4 set —
-    // a vector's probe rank pr is the crn of its cell in the query's
-    // probe list (unique: a vector lives in one cell, probe cells are
-    // distinct per query) — so the corpus-side candidate join and the
-    // cosines compute ONCE at np_max=4, and a 3-row broadcast range-join
-    // expands each candidate to every nprobe ≥ pr. ONE window ranks per
-    // (query, nprobe) over the metadata-sized candidate rows; per-point
-    // recall is a keyed aggregate. Semantics proven identical: same rows
-    // per (q_id, nprobe) partition, same (cos desc, hit_id asc) order,
-    // inner-join-with-truth count ≡ the old per-point left_semi count
-    // because (q_id, hit_id) is unique in the candidate frame.
     import s.implicits._
-    val probes = aff.filter(col("vec_id") < 10 && col("crn") <= 4)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"), col("crn").as("pr"))
-    val cand = base.join(broadcast(q.join(probes, "q_id")),
-        col("cell") === col("pcell") && col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
-      .select(col("q_id"), col("pr"), col("vec_id").as("hit_id"), col("cos"))
+    // candidates at nprobe = 1/2 are subsets of the nprobe = 4 set (see
+    // [[queryProbes]]), so one pass at 4 expands to every nprobe ≥ pr
+    val e = vecs(s, d)
+    val cand = probedCandidates(s, d, e, cellAssignments(s, d), 4)
       .localCheckpoint() // feeds the expansion; |queries|-bounded rows
     val nps = Seq(1, 2, 4).toDF("nprobe")
-    val found = cand.join(broadcast(nps), col("pr") <= col("nprobe"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("q_id", "nprobe")
-          .orderBy(col("cos").desc, col("hit_id").asc)))
-      .filter(col("rk") <= 5)
-      .join(exact, Seq("q_id", "hit_id"))
-      .groupBy("nprobe").agg(count(lit(1)).as("n_found"))
-    nps.join(found, Seq("nprobe"), "left")
-      .na.fill(0L, Seq("n_found"))
-      .crossJoin(broadcast(exn))
-      .select(col("nprobe"), col("n_found"),
-        round(col("n_found").cast("double") / col("n_exact"), 6).as("recall"))
+    recallReadout(cand.join(broadcast(nps), col("pr") <= col("nprobe")),
+        "nprobe", "cos", nps, exactTopK(e, 5))
+      .select(col("nprobe"), col("n_hits").as("n_found"),
+        round(col("n_hits").cast("double") / col("n_exact"), 6).as("recall"))
       .orderBy("nprobe")
   }
 
@@ -2150,39 +2071,33 @@ object VectorOps {
     * Scale: each curve point is the brute-force shape ONLY because the
     * corpus fixture is exact-rankable; the operator a deployment runs
     * is v22 (truncated coarse → exact rerank) — this curve is its
-    * tuning table, |queries|×5 rows per point. */
+    * tuning table, |queries|×5 rows per point. The four prefixes are a
+    * broadcast dim frame expanded over ONE corpus scan (the oracle's
+    * `FROM e, dims`): the query side is |dims|·|queries| rows and joins
+    * on dim, so one map-only pass scores every point. */
   def matryoshkaRecallCurve(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    import s.implicits._
+    val dims = Seq(8, 16, 32, 48).toDF("dim")
     val e = vecs(s, d)
-    val exact = cosineTopK(s, d).filter(col("rk") <= 5)
-      .select(col("q_id"), col("hit_id"))
-    val exn = exact.agg(count(lit(1)).as("n_exact"))
-    Seq(8, 16, 32, 48).map { dim =>
-      val t = e.withColumn("tq",
-        expr(s"transform(slice(embedding, 1, $dim), x -> cast(floor(cast(x AS double) * 200.0D) AS double))"))
-      val q = t.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("tq").as("qt"))
-      val hits = t.join(broadcast(q), col("q_id") =!= col("vec_id"))
-        .withColumn("score", dot("qt", "tq").cast("long"))
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("q_id")
-            .orderBy(col("score").desc, col("vec_id").asc)))
-        .filter(col("rk") <= 5)
-        .select(col("q_id"), col("vec_id").as("hit_id"))
-      exact.join(hits, Seq("q_id", "hit_id"), "left_semi")
-        .agg(count(lit(1)).as("n_found"))
-        .crossJoin(broadcast(exn))
-        .select(lit(dim).as("dim"), col("n_found"),
-          round(col("n_found").cast("double") / col("n_exact"), 6).as("recall"))
-    }.reduce(_ unionByName _).orderBy("dim")
+    val t = e.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(dims))
+      .withColumn("tq", expr(
+        "transform(slice(embedding, 1, dim), x -> cast(floor(cast(x AS double) * 200.0D) AS double))"))
+    val q = t.filter(col("vec_id") < 10)
+      .select(col("dim"), col("vec_id").as("q_id"), col("tq").as("qt"))
+    val scored = t.join(broadcast(q), Seq("dim"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .select(col("dim"), col("q_id"), col("vec_id").as("hit_id"),
+        dot("qt", "tq").cast("long").as("score"))
+    recallReadout(scored, "dim", "score", dims, exactTopK(e, 5))
+      .select(col("dim"), col("n_hits").as("n_found"),
+        round(col("n_hits").cast("double") / col("n_exact"), 6).as("recall"))
+      .orderBy("dim")
   }
 
   private val MatryoshkaCurveDuck: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |p0 AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id,
-      |        round(list_dot_product(q.v, b.v) /
-      |              (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-      |      FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id),
+    s"""$EmbDuck,
+      |${exactPairsDuck("p0")},
       |r0 AS (SELECT q_id, hit_id,
       |        ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk
       |      FROM p0),
@@ -2250,19 +2165,10 @@ object VectorOps {
       .select(col("q_id"), col("qv"), col("qn"),
         col("qb0").bitwiseXOR(col("mask")).as("pb"), col("prn"))
       .localCheckpoint()
-    val exact = cosineTopK(s, d).filter(col("rk") <= 5)
-      .select(col("q_id"), col("hit_id"))
-    val exn = exact.agg(count(lit(1)).as("n_exact"))
-    // One plan, not four (v37's expansion discipline, round-20's named
-    // lever): the probed-bucket candidate sets are NESTED in T — a base
-    // vector matches at most one probe rank per query (one bucket per
-    // vector, distinct pb per query since pb = qb0 XOR distinct masks) —
-    // so the corpus-side bucket join and the cosines compute ONCE at
-    // T_max=8 carrying prn, and a 4-row broadcast range-join expands
-    // each candidate to every T ≥ its prn. ONE window ranks per
-    // (query, T); per-point recall is a keyed aggregate. Inner-join-
-    // with-truth count ≡ the old per-point left_semi count because
-    // (q_id, hit_id) is unique in the candidate frame.
+    // the probed-bucket candidate sets are NESTED in T — a base vector
+    // matches at most one probe rank per query (one bucket per vector,
+    // distinct pb per query since pb = qb0 XOR distinct masks) — so one
+    // pass at T_max = 8 carrying prn expands to every T ≥ its prn
     import s.implicits._
     val cand = base.join(broadcast(ranked.filter(col("prn") <= 8)),
         col("pb") === col("bucket") && col("q_id") =!= col("vec_id"))
@@ -2270,18 +2176,10 @@ object VectorOps {
       .select(col("q_id"), col("prn"), col("vec_id").as("hit_id"), col("cos"))
       .localCheckpoint() // feeds the expansion; |queries|-bounded rows
     val ts = Seq(1, 3, 5, 8).toDF("n_probes")
-    val found = cand.join(broadcast(ts), col("prn") <= col("n_probes"))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("q_id", "n_probes")
-          .orderBy(col("cos").desc, col("hit_id").asc)))
-      .filter(col("rk") <= 5)
-      .join(exact, Seq("q_id", "hit_id"))
-      .groupBy("n_probes").agg(count(lit(1)).as("n_found"))
-    ts.join(found, Seq("n_probes"), "left")
-      .na.fill(0L, Seq("n_found"))
-      .crossJoin(broadcast(exn))
-      .select(col("n_probes"), col("n_found"),
-        round(col("n_found").cast("double") / col("n_exact"), 6).as("recall"))
+    recallReadout(cand.join(broadcast(ts), col("prn") <= col("n_probes")),
+        "n_probes", "cos", ts, exactTopK(base, 5))
+      .select(col("n_probes"), col("n_hits").as("n_found"),
+        round(col("n_hits").cast("double") / col("n_exact"), 6).as("recall"))
       .orderBy("n_probes")
   }
 
@@ -2457,14 +2355,11 @@ object VectorOps {
     import org.apache.spark.sql.expressions.Window
     val packed = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"),
       signPack("v", 0).as("lo"), signPack("v", 32).as("hi"))
-    val probes = centroidAffinity(s, d)
-      .filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
     val q = packed.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid2"), col("v").as("qv"), col("nrm").as("qn"),
         col("lo").as("qlo"), col("hi").as("qhi"))
-    val cand = probes
-      .join(ivfCells(s, d).select(col("vec_id").as("hit_id"), col("cell")),
+    val cand = queryProbes(s, d, 2)
+      .join(cellAssignments(s, d).withColumnRenamed("vec_id", "hit_id"),
         col("pcell") === col("cell"))
       .filter(col("hit_id") =!= col("q_id"))
       .join(packed.withColumnRenamed("vec_id", "hit_id"), "hit_id")
@@ -2487,15 +2382,9 @@ object VectorOps {
   private val IvfBinaryDuck: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |pk AS (SELECT vec_id, v, ${signPackDuck(0)} AS lo, ${signPackDuck(32)} AS hi FROM e),
-       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-       |aff AS (SELECT e.vec_id, c.cid,
-       |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |      ORDER BY round(list_dot_product(e.v, c.cv) /
-       |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-       |        c.cid ASC) AS crn
-       |  FROM e, c),
-       |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-       |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+       |$AffDuck,
+       |$CellsDuck,
+       |$ProbesDuck,
        |cand AS (SELECT pr.q_id, cl.vec_id AS hit_id,
        |    CAST(bit_count(xor(qp.lo, bp.lo)) + bit_count(xor(qp.hi, bp.hi)) AS BIGINT) AS hamming
        |  FROM probes pr
@@ -2528,14 +2417,11 @@ object VectorOps {
     import org.apache.spark.sql.expressions.Window
     val packed = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"),
       signPack("v", 0).as("lo"), signPack("v", 32).as("hi"))
-    val probes = centroidAffinity(s, d)
-      .filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
     val q = packed.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid2"), col("v").as("qv"), col("nrm").as("qn"),
         col("lo").as("qlo"), col("hi").as("qhi"))
-    val cand = probes
-      .join(ivfCells(s, d).select(col("vec_id").as("hit_id"), col("cell")),
+    val cand = queryProbes(s, d, 2)
+      .join(cellAssignments(s, d).withColumnRenamed("vec_id", "hit_id"),
         col("pcell") === col("cell"))
       .filter(col("hit_id") =!= col("q_id"))
       .join(packed.withColumnRenamed("vec_id", "hit_id"), "hit_id")
@@ -2547,45 +2433,22 @@ object VectorOps {
       .withColumn("cos", round(dot("qv", "v") / (col("qn") * col("nrm")), 6))
       .select("q_id", "hit_id", "hrn", "cos")
       .localCheckpoint() // one shortlist frame serves all curve points
-    val truth = cosineTopK(s, d).filter(col("rk") <= 5)
-      .select(col("q_id").as("tq"), col("hit_id").as("th"))
-      .localCheckpoint()
-    val nTruth = truth.count() // derived denominator
-    // One window, not three (v37's expansion discipline, round-20's
-    // named lever): the shortlist sets are NESTED in t (hrn ≤ 10 ⊂ 20 ⊂
-    // 40), so a 3-row broadcast range-join expands the one checkpointed
-    // candidate frame per curve point and ONE window ranks per
-    // (shortlist, query); per-point hits are a keyed aggregate over the
-    // same inner truth join as before.
+    // the shortlist sets are NESTED in t (hrn ≤ 10 ⊂ 20 ⊂ 40)
     import s.implicits._
     val sizes = Seq(10L, 20L, 40L).toDF("shortlist")
-    val found = cand.join(broadcast(sizes), col("hrn") <= col("shortlist"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("shortlist", "q_id")
-          .orderBy(col("cos").desc, col("hit_id").asc)))
-      .filter(col("rk") <= 5)
-      .join(truth, col("q_id") === col("tq") && col("hit_id") === col("th"))
-      .groupBy("shortlist").agg(count(lit(1)).as("n_hits"))
-    sizes.join(found, Seq("shortlist"), "left")
-      .na.fill(0L, Seq("n_hits"))
-      .select(col("shortlist"), col("n_hits"),
-        lit(nTruth).as("n_truth"),
-        round(col("n_hits") / lit(nTruth.toDouble), 6).as("recall"))
+    recallReadout(cand.join(broadcast(sizes), col("hrn") <= col("shortlist")),
+        "shortlist", "cos", sizes, exactTopK(packed, 5))
+      .select(col("shortlist"), col("n_hits"), col("n_exact").as("n_truth"),
+        round(col("n_hits") / col("n_exact"), 6).as("recall"))
       .orderBy("shortlist")
   }
 
   private val BinaryCurveDuck: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |pk AS (SELECT vec_id, ${signPackDuck(0)} AS lo, ${signPackDuck(32)} AS hi FROM e),
-       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-       |aff AS (SELECT e.vec_id, c.cid,
-       |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |      ORDER BY round(list_dot_product(e.v, c.cv) /
-       |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-       |        c.cid ASC) AS crn
-       |  FROM e, c),
-       |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-       |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+       |$AffDuck,
+       |$CellsDuck,
+       |$ProbesDuck,
        |cand AS (SELECT pr.q_id, cl.vec_id AS hit_id,
        |    ROW_NUMBER() OVER (PARTITION BY pr.q_id
        |      ORDER BY bit_count(xor(qp.lo, bp.lo)) + bit_count(xor(qp.hi, bp.hi)) ASC,
@@ -2620,6 +2483,122 @@ object VectorOps {
 
   // --- DuckDB oracle twins -------------------------------------------------
 
+  // Shared CTE fragments, one per building block the Spark side defines
+  // once. Each is margin-stripped text that an oracle interpolates into
+  // its own stripMargin literal — so no fragment line may start with `|`
+  // (stripMargin would strip it). Lazy: oracle vals defined above read
+  // them during object initialisation.
+
+  /** `e`: every vector as DOUBLE[] — the opening CTE of most oracles. */
+  private lazy val EmbDuck = "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+  /** [[centroidAffinity]]'s twin over an `e` CTE with (vec_id, v): `c`,
+    * the 16 id-pinned centroids, and `aff`, every vector's centroid rank
+    * crn (rounded cosine desc, cid asc). */
+  private lazy val AffDuck =
+    """c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
+      |aff AS (SELECT e.vec_id, c.cid,
+      |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
+      |      ORDER BY round(list_dot_product(e.v, c.cv) /
+      |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
+      |        c.cid ASC) AS crn
+      |  FROM e, c)""".stripMargin
+
+  /** [[cellAssignments]]' twin. */
+  private lazy val CellsDuck = "cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1)"
+
+  /** The 2-probe [[queryProbes]] twin. */
+  private lazy val ProbesDuck =
+    "probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2)"
+
+  /** `e` and its routing. */
+  private lazy val RoutingDuck = s"$EmbDuck,\n$AffDuck"
+
+  /** The routed-search prefix: `e`, routing, cells and 2 probes. */
+  private lazy val RoutedDuck = s"$RoutingDuck,\n$CellsDuck,\n$ProbesDuck"
+
+  /** [[centroidAffinity]]'s twin carrying each vector's rounded cosine
+    * to the centroid (ccos) beside its rank. */
+  private lazy val AffCcosDuck =
+    """c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
+      |aff AS (SELECT e.vec_id, c.cid,
+      |    round(list_dot_product(e.v, c.cv) /
+      |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) AS ccos,
+      |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
+      |      ORDER BY round(list_dot_product(e.v, c.cv) /
+      |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
+      |        c.cid ASC) AS crn
+      |  FROM e, c)""".stripMargin
+
+  /** The semantic-dedup family's routing over a normed `n` CTE and a
+    * centroid CTE `c` (cid, cv, cn): `aff`, `cells` and `m`, every
+    * vector with its cell. */
+  private lazy val CellMembersDuck =
+    s"""aff AS (SELECT n.vec_id, c.cid,
+       |    ROW_NUMBER() OVER (PARTITION BY n.vec_id
+       |      ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
+       |        c.cid ASC) AS crn
+       |  FROM n, c),
+       |$CellsDuck,
+       |m AS (SELECT cells.cell, n.vec_id, n.v, n.nrm FROM n JOIN cells USING (vec_id))""".stripMargin
+
+  /** [[cellCosineNearDupPairs]]' twin `cp`: within-cell pairs at τ = 0.45. */
+  private lazy val CellPairsDuck =
+    """cp AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id
+      |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id
+      |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.45)""".stripMargin
+
+  /** The rounded cosine of a (`q`, `b`) pair of `e` rows. */
+  private lazy val CosQBDuck =
+    """round(list_dot_product(q.v, b.v) /
+      |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6)""".stripMargin
+
+  /** [[probedCandidates]]' twin at 2 probes, `p`: every query paired
+    * with the members of its probed cells, scored. */
+  private lazy val IvfPairsDuck =
+    s"""p AS (SELECT pr.q_id, b.vec_id AS hit_id,
+       |    $CosQBDuck AS cos
+       |  FROM probes pr
+       |  JOIN e q ON q.vec_id = pr.q_id
+       |  JOIN cells cl ON cl.cell = pr.pcell
+       |  JOIN e b ON b.vec_id = cl.vec_id AND b.vec_id != pr.q_id)""".stripMargin
+
+  /** [[ivfSearchOn]]'s twin: `p` ranked per query as `r`. */
+  private lazy val IvfSearchDuck =
+    s"""$IvfPairsDuck,
+       |r AS (SELECT q_id, hit_id, cos,
+       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p)""".stripMargin
+
+  /** [[exactTopK]]'s scored pairs as CTE `name`: every query vector
+    * against every other vector. */
+  private def exactPairsDuck(name: String): String =
+    s"""$name AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id,
+       |        round(list_dot_product(q.v, b.v) /
+       |              (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
+       |      FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id)""".stripMargin
+
+  /** The exact top-5 baseline `ex` and its row count `exn`, the recall
+    * denominator [[recallReadout]] derives; `p`/`r` name the pair and
+    * rank CTEs. */
+  private def exactTop5Duck(p: String, r: String): String =
+    s"""$p AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id, $CosQBDuck AS cos
+       |  FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id),
+       |$r AS (SELECT q_id, hit_id,
+       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM $p),
+       |ex AS (SELECT q_id, hit_id FROM $r WHERE rk <= 5),
+       |exn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM ex)""".stripMargin
+
+  /** v37/v40's exact top-5 `exact` over the query CTE `q`. */
+  private lazy val ExactQDuck =
+    """q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+      |exact AS (SELECT q_id, hit_id FROM (
+      |    SELECT q.q_id, b.vec_id AS hit_id,
+      |      ROW_NUMBER() OVER (PARTITION BY q.q_id
+      |        ORDER BY round(list_dot_product(q.qv, b.v) /
+      |            (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(b.v, b.v))), 6) DESC,
+      |          b.vec_id ASC) AS rk
+      |    FROM q JOIN e b ON b.vec_id != q.q_id) WHERE rk <= 5)""".stripMargin
+
   private def planeSqlList(j: Int): String =
     (0 until Dim).map(k => planeWeight(j, k).toInt.toString).mkString("[", ",", "]")
 
@@ -2628,60 +2607,65 @@ object VectorOps {
       s"(CASE WHEN list_dot_product(v, ${planeSqlList(j)}::DOUBLE[]) > 0 THEN ${1 << j} ELSE 0 END)"
     }.mkString(" + ")
 
-  private val CosDuck =
-    "list_dot_product(%s, %s) / (sqrt(list_dot_product(%s, %s)) * sqrt(list_dot_product(%s, %s)))"
+  /** [[pqCand64Uncached]]'s twin over a quantized `v` CTE (vec_id,
+    * qv): `sub`, the 8-dim sub-vectors, `cb`, the 64-codeword codebook
+    * (ids < 64), and `cand`, every sub-vector's integer L2² and inner
+    * product against every codeword. */
+  private lazy val PqCand64Duck =
+    """sub AS (SELECT vec_id, CAST(ms.m AS INT) AS m,
+      |    (qv[ms.m * 8 + 1 : ms.m * 8 + 8])::DOUBLE[] AS sv
+      |  FROM v, (SELECT unnest(generate_series(0, 7)) AS m) ms),
+      |cb AS (SELECT m, vec_id AS j, sv AS cv FROM sub WHERE vec_id < 64),
+      |cand AS (SELECT s.vec_id, s.m, c.j,
+      |    CAST(list_dot_product(s.sv, s.sv) + list_dot_product(c.cv, c.cv)
+      |       - 2 * list_dot_product(s.sv, c.cv) AS BIGINT) AS d2,
+      |    CAST(list_dot_product(s.sv, c.cv) AS BIGINT) AS ip
+      |  FROM sub s JOIN cb c ON c.m = s.m)""".stripMargin
+
+  /** The PQ encode `enc`: per (vector, subspace) the codeword of least
+    * L2², j-asc tie-break. */
+  private lazy val PqEncDuck =
+    """enc AS (SELECT vec_id, m, j AS code FROM (
+      |    SELECT vec_id, m, j,
+      |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, j ASC) AS rn
+      |    FROM cand) t WHERE rn = 1)""".stripMargin
 
   /** The shared IVF-PQ derivation CTEs (through the per-vector `enc`
     * codes and `cells` routing) — the prefix of v24/v43's top-k oracle,
     * reused verbatim by v44's full-rebuild census oracle. */
   private lazy val IvfPqEncCtesDuck: String =
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+      s"""$RoutedDuck,
         |v AS (SELECT vec_id,
         |    list_transform(embedding, x -> FLOOR(CAST(x AS DOUBLE) * 200.0)) AS qv
         |  FROM embeddings),
-        |sub AS (SELECT vec_id, CAST(ms.m AS INT) AS m,
-        |    (qv[ms.m * 8 + 1 : ms.m * 8 + 8])::DOUBLE[] AS sv
-        |  FROM v, (SELECT unnest(generate_series(0, 7)) AS m) ms),
-        |cb AS (SELECT m, vec_id AS j, sv AS cv FROM sub WHERE vec_id < 64),
-        |cand AS (SELECT s.vec_id, s.m, c.j,
-        |    CAST(list_dot_product(s.sv, s.sv) + list_dot_product(c.cv, c.cv)
-        |       - 2 * list_dot_product(s.sv, c.cv) AS BIGINT) AS d2,
-        |    CAST(list_dot_product(s.sv, c.cv) AS BIGINT) AS ip
-        |  FROM sub s JOIN cb c ON c.m = s.m),
-        |enc AS (SELECT vec_id, m, j AS code FROM (
-        |    SELECT vec_id, m, j,
-        |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, j ASC) AS rn
-        |    FROM cand) t WHERE rn = 1)""".stripMargin
+        |$PqCand64Duck,
+        |$PqEncDuck""".stripMargin
 
-  /** The IVF-PQ top-5 oracle tail, parameterized by an extra index-
-    * side predicate: "" is v24's oracle (shared verbatim by v43/v45 —
+  /** [[ivfPqTopKOn]]'s ADC tail over `enc`, `cand`, `cells` and
+    * `probes`: the query LUT, the probed-cell ADC sums and the top-5,
+    * with an extra index-side predicate. */
+  private def ivfPqAdcTopkDuck(extra: String): String =
+    s"""lut AS (SELECT vec_id AS q_id, m, j, ip AS qip FROM cand WHERE vec_id < 10),
+       |adc AS (SELECT l.q_id, en.vec_id, CAST(SUM(l.qip) AS BIGINT) AS ascore
+       |  FROM enc en
+       |  JOIN cells cl ON cl.vec_id = en.vec_id
+       |  JOIN probes pr ON pr.pcell = cl.cell
+       |  JOIN lut l ON l.q_id = pr.q_id AND l.m = en.m AND l.j = en.code
+       |  WHERE en.vec_id <> pr.q_id$extra
+       |  GROUP BY l.q_id, en.vec_id),
+       |top AS (SELECT q_id, vec_id, ascore,
+       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ascore DESC, vec_id ASC) AS rk
+       |  FROM adc)
+       |SELECT q_id, rk, vec_id AS hit_id, ascore
+       |FROM top WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin
+
+  /** The IVF-PQ top-5 oracle, parameterized by an extra index-side
+    * predicate: "" is v24's oracle (shared verbatim by v43/v45 —
     * artifact-scan paths must agree with the in-session build path,
     * and t71's serve check references it); the deletion-residue
     * exclusion is v48's (the top-k over the FILTERED corpus). */
-  private def ivfPqTopkDuckWhere(extra: String): String = IvfPqEncCtesDuck +
-      s""",
-        |lut AS (SELECT vec_id AS q_id, m, j, ip AS qip FROM cand WHERE vec_id < 10),
-        |adc AS (SELECT l.q_id, en.vec_id, CAST(SUM(l.qip) AS BIGINT) AS ascore
-        |  FROM enc en
-        |  JOIN cells cl ON cl.vec_id = en.vec_id
-        |  JOIN probes pr ON pr.pcell = cl.cell
-        |  JOIN lut l ON l.q_id = pr.q_id AND l.m = en.m AND l.j = en.code
-        |  WHERE en.vec_id <> pr.q_id$extra
-        |  GROUP BY l.q_id, en.vec_id),
-        |top AS (SELECT q_id, vec_id, ascore,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ascore DESC, vec_id ASC) AS rk
-        |  FROM adc)
-        |SELECT q_id, rk, vec_id AS hit_id, ascore
-        |FROM top WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin
+  private def ivfPqTopkDuckWhere(extra: String): String =
+    s"$IvfPqEncCtesDuck,\n${ivfPqAdcTopkDuck(extra)}"
 
   private[queries] lazy val IvfPqTopkDuck: String = ivfPqTopkDuckWhere("")
 
@@ -2725,11 +2709,8 @@ object VectorOps {
     "v28_binary_shortlist_curve" -> QueryDef(binaryShortlistCurve _, BinaryCurveDuck),
 
     "v01_cosine_topk" -> QueryDef(cosineTopK _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |p AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id,
-        |        round(list_dot_product(q.v, b.v) /
-        |              (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |      FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id),
+      s"""$EmbDuck,
+        |${exactPairsDuck("p")},
         |r AS (SELECT q_id, hit_id, cos,
         |        ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk
         |      FROM p)
@@ -2771,17 +2752,11 @@ object VectorOps {
     // v15's pair frame swept across five thresholds in one pass; the
     // oracle restates cells + pairs and joins the literal τ list
     "v29_semdedup_threshold_curve" -> QueryDef(semdedupThresholdCurve _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |c AS (SELECT vec_id AS cid, v AS cv, sqrt(list_dot_product(v, v)) AS cn
         |      FROM e WHERE vec_id < 16),
-        |aff AS (SELECT n.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |      ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM n, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |m AS (SELECT cells.cell, n.vec_id, n.v, n.nrm FROM n JOIN cells USING (vec_id)),
+        |$CellMembersDuck,
         |p AS (SELECT b.vec_id AS b_id,
         |    round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos
         |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id),
@@ -2800,17 +2775,11 @@ object VectorOps {
     // cluster-then-pair semantic dedup: pairs are sought only within a
     // cell; the oracle restates the same cell assignment + keep-lowest
     "v15_semantic_dedup" -> QueryDef(semanticDedup _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |c AS (SELECT vec_id AS cid, v AS cv, sqrt(list_dot_product(v, v)) AS cn
         |      FROM e WHERE vec_id < 16),
-        |aff AS (SELECT n.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |      ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM n, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |m AS (SELECT cells.cell, n.vec_id, n.v, n.nrm FROM n JOIN cells USING (vec_id)),
+        |$CellMembersDuck,
         |dup AS (SELECT b.vec_id AS b_id, COUNT(*) AS n_dup_prior
         |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id
         |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.45
@@ -2856,91 +2825,36 @@ object VectorOps {
          |ORDER BY a_id, b_id""".stripMargin),
 
     "v08_ivf_topk" -> QueryDef(ivfTopK _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) AS ccos,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
-        |p AS (SELECT pr.q_id, b.vec_id AS hit_id,
-        |    round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |  FROM probes pr
-        |  JOIN e q ON q.vec_id = pr.q_id
-        |  JOIN cells cl ON cl.cell = pr.pcell
-        |  JOIN e b ON b.vec_id = cl.vec_id AND b.vec_id != pr.q_id),
-        |r AS (SELECT q_id, hit_id, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p)
+      s"""$EmbDuck,
+        |$AffCcosDuck,
+        |$CellsDuck,
+        |$ProbesDuck,
+        |$IvfSearchDuck
         |SELECT q_id, rk, hit_id, cos FROM r WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin),
 
     // insert overlay vs full index must be result-invisible: graded
     // against v08's oracle VERBATIM (the assignment RULE defines the
     // index, not the materialized table)
     "v35_ivf_insert_overlay" -> QueryDef(ivfTopKWithInserts _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
-        |p AS (SELECT pr.q_id, b.vec_id AS hit_id,
-        |    round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |  FROM probes pr
-        |  JOIN e q ON q.vec_id = pr.q_id
-        |  JOIN cells cl ON cl.cell = pr.pcell
-        |  JOIN e b ON b.vec_id = cl.vec_id AND b.vec_id != pr.q_id),
-        |r AS (SELECT q_id, hit_id, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p)
+      s"""$RoutedDuck,
+        |$IvfSearchDuck
         |SELECT q_id, rk, hit_id, cos FROM r WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin),
 
     // overlay vs rebuild must be result-invisible: the oracle searches
     // the FILTERED corpus directly
     "v34_ivf_with_deletes" -> QueryDef(ivfTopKWithDeletes _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
+      s"""$RoutingDuck,
         |cells AS (SELECT vec_id, cid AS cell FROM aff
         |          WHERE crn = 1 AND vec_id % 7 != 0),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
-        |p AS (SELECT pr.q_id, b.vec_id AS hit_id,
-        |    round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |  FROM probes pr
-        |  JOIN e q ON q.vec_id = pr.q_id
-        |  JOIN cells cl ON cl.cell = pr.pcell
-        |  JOIN e b ON b.vec_id = cl.vec_id AND b.vec_id != pr.q_id),
-        |r AS (SELECT q_id, hit_id, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p)
+        |$ProbesDuck,
+        |$IvfSearchDuck
         |SELECT q_id, rk, hit_id, cos FROM r WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin),
 
     // the rebuild/don't-rebuild decision per cell from v34/v35's own
     // overlay accounting — oracle re-derives cells, cut, tombstones,
     // and arrivals from the rules, all integer arithmetic
     "v36_ivf_compaction_trigger" -> QueryDef(ivfCompactionTrigger _,
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         |aff AS (SELECT e.vec_id, c.cid,
-         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |      ORDER BY round(list_dot_product(e.v, c.cv) /
-         |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-         |        c.cid ASC) AS crn
-         |  FROM e, c),
+      s"""$RoutingDuck,
          |cut AS (SELECT (MAX(vec_id) * 9) // 10 AS cut FROM e),
          |art AS (SELECT cid AS cell, COUNT(*) AS base_rows,
          |    CAST(SUM(CASE WHEN vec_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tomb_rows
@@ -2960,26 +2874,11 @@ object VectorOps {
     // search (v34's filtered-corpus restatement) under both phases —
     // q57's pre/post hash-match rule
     "v38_ivf_compaction_rebuild" -> QueryDef(ivfCompactionRebuild _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
+      s"""$RoutingDuck,
         |cells AS (SELECT vec_id, cid AS cell FROM aff
         |          WHERE crn = 1 AND vec_id % 7 != 0),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
-        |p AS (SELECT pr.q_id, b.vec_id AS hit_id,
-        |    round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |  FROM probes pr
-        |  JOIN e q ON q.vec_id = pr.q_id
-        |  JOIN cells cl ON cl.cell = pr.pcell
-        |  JOIN e b ON b.vec_id = cl.vec_id AND b.vec_id != pr.q_id),
-        |r AS (SELECT q_id, hit_id, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p),
+        |$ProbesDuck,
+        |$IvfSearchDuck,
         |sel AS (SELECT q_id, rk, hit_id, cos FROM r WHERE rk <= 5)
         |SELECT '1_pre_rebuild' AS phase, q_id, rk, hit_id, cos FROM sel
         |UNION ALL
@@ -2989,22 +2888,14 @@ object VectorOps {
     // the candidate generator's recall vs the v02 exact truth set —
     // both sets restated, the hit join on the shared rounded grid
     "v39_cell_pair_recall" -> QueryDef(cellPairRecall _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |tp AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id
         |  FROM n a JOIN n b ON a.vec_id < b.vec_id
         |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.45),
         |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 16),
-        |aff AS (SELECT n.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |      ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM n, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |m AS (SELECT cells.cell, n.vec_id, n.v, n.nrm FROM n JOIN cells USING (vec_id)),
-        |cp AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.45),
+        |$CellMembersDuck,
+        |$CellPairsDuck,
         |h AS (SELECT COUNT(*) AS n_hit
         |  FROM cp JOIN tp ON tp.a_id = cp.a_id AND tp.b_id = cp.b_id)
         |SELECT (SELECT COUNT(*) FROM tp) AS n_true,
@@ -3019,7 +2910,7 @@ object VectorOps {
     // deterministic hash-samples (both engines compute the same md5
     // bucket); k=1 is the exact audit, k=2/4 the scale posture
     "v41_sampled_pair_recall" -> QueryDef(sampledPairRecall _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |ks AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS k),
         |sv AS (SELECT ks.k, n.vec_id, n.v, n.nrm FROM n, ks
@@ -3028,16 +2919,8 @@ object VectorOps {
         |  FROM sv a JOIN sv b ON a.k = b.k AND a.vec_id < b.vec_id
         |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.45),
         |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 16),
-        |aff AS (SELECT n.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY n.vec_id
-        |      ORDER BY round(list_dot_product(n.v, c.cv) / (n.nrm * c.cn), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM n, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |m AS (SELECT cells.cell, n.vec_id, n.v, n.nrm FROM n JOIN cells USING (vec_id)),
-        |cp AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |  FROM m a JOIN m b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.45),
+        |$CellMembersDuck,
+        |$CellPairsDuck,
         |cpk AS (SELECT ks.k, cp.a_id, cp.b_id FROM cp, ks
         |  WHERE ('0x' || substr(md5(CAST(cp.a_id AS VARCHAR) || ':cal'), 1, 8))::BIGINT % ks.k = 0
         |    AND ('0x' || substr(md5(CAST(cp.b_id AS VARCHAR) || ':cal'), 1, 8))::BIGINT % ks.k = 0),
@@ -3061,24 +2944,10 @@ object VectorOps {
     // the build point invisible — no overlay) vs the full-corpus truth,
     // per build-point fraction; integers on the rounded-cosine grid
     "v40_ivf_staleness_curve" -> QueryDef(ivfStalenessCurve _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-        |exact AS (SELECT q_id, hit_id FROM (
-        |    SELECT q.q_id, b.vec_id AS hit_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q.q_id
-        |        ORDER BY round(list_dot_product(q.qv, b.v) /
-        |            (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(b.v, b.v))), 6) DESC,
-        |          b.vec_id ASC) AS rk
-        |    FROM q JOIN e b ON b.vec_id != q.q_id) WHERE rk <= 5),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+      s"""$RoutingDuck,
+        |$CellsDuck,
+        |$ExactQDuck,
+        |$ProbesDuck,
         |cand AS (SELECT pr.q_id, b.vec_id AS hit_id,
         |    round(list_dot_product(qe.v, b.v) /
         |          (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
@@ -3111,23 +2980,9 @@ object VectorOps {
     // nProbes 1..4, ground truth = brute-force top-5; all counts and
     // the permille recall are exact integers on the rounded-cosine grid
     "v37_ivf_probe_recall_curve" -> QueryDef(ivfProbeRecallCurve _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-        |exact AS (SELECT q_id, hit_id FROM (
-        |    SELECT q.q_id, b.vec_id AS hit_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q.q_id
-        |        ORDER BY round(list_dot_product(q.qv, b.v) /
-        |            (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(b.v, b.v))), 6) DESC,
-        |          b.vec_id ASC) AS rk
-        |    FROM q JOIN e b ON b.vec_id != q.q_id) WHERE rk <= 5),
+      s"""$RoutingDuck,
+        |$CellsDuck,
+        |$ExactQDuck,
         |probes AS (SELECT vec_id AS q_id, cid AS pcell, crn AS pr
         |  FROM aff WHERE vec_id < 10 AND crn <= 4),
         |cand AS (SELECT pr.q_id, pr.pr, b.vec_id AS hit_id,
@@ -3155,14 +3010,7 @@ object VectorOps {
         |ORDER BY s.n_probes""".stripMargin),
 
     "v11_kmeans_round" -> QueryDef(kmeansRound _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
+      s"""$RoutingDuck,
         |m AS (SELECT aff.cid AS cell, e.v FROM aff JOIN e USING (vec_id) WHERE crn = 1),
         |x AS (SELECT cell,
         |    CAST(unnest(generate_series(1, len(v))) AS INT) - 1 AS pos,
@@ -3243,16 +3091,7 @@ object VectorOps {
     // rebuild, so it shares v24's oracle verbatim (the v43 convention)
     "v45_ann_rolled_serve" -> QueryDef(annRolledServeTopK _, IvfPqTopkDuck),
     "v25_ivfpq_residual_topk" -> QueryDef(ivfPqResidualTopK _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+      s"""$RoutedDuck,
         |v AS (SELECT vec_id,
         |    list_transform(embedding, x -> FLOOR(CAST(x AS DOUBLE) * 200.0)) AS qv
         |  FROM embeddings),
@@ -3310,16 +3149,7 @@ object VectorOps {
     // v24's chain verbatim except the quantized frame passes through the
     // ±1 Hadamard rotation before sub-vector slicing
     "v33_ivfpq_opq_topk" -> QueryDef(ivfPqOpqTopK _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+      s"""$RoutedDuck,
         |v0 AS (SELECT vec_id,
         |    list_transform(embedding, x -> FLOOR(CAST(x AS DOUBLE) * 200.0)) AS qv0
         |  FROM embeddings),
@@ -3328,58 +3158,18 @@ object VectorOps {
         |      j -> CASE WHEN bit_count(i & j) % 2 = 0 THEN qv0[j + 1]
         |                ELSE -qv0[j + 1] END))) AS qv
         |  FROM v0),
-        |sub AS (SELECT vec_id, CAST(ms.m AS INT) AS m,
-        |    (qv[ms.m * 8 + 1 : ms.m * 8 + 8])::DOUBLE[] AS sv
-        |  FROM v, (SELECT unnest(generate_series(0, 7)) AS m) ms),
-        |cb AS (SELECT m, vec_id AS j, sv AS cv FROM sub WHERE vec_id < 64),
-        |cand AS (SELECT s.vec_id, s.m, c.j,
-        |    CAST(list_dot_product(s.sv, s.sv) + list_dot_product(c.cv, c.cv)
-        |       - 2 * list_dot_product(s.sv, c.cv) AS BIGINT) AS d2,
-        |    CAST(list_dot_product(s.sv, c.cv) AS BIGINT) AS ip
-        |  FROM sub s JOIN cb c ON c.m = s.m),
-        |enc AS (SELECT vec_id, m, j AS code FROM (
-        |    SELECT vec_id, m, j,
-        |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2 ASC, j ASC) AS rn
-        |    FROM cand) t WHERE rn = 1),
-        |lut AS (SELECT vec_id AS q_id, m, j, ip AS qip FROM cand WHERE vec_id < 10),
-        |adc AS (SELECT l.q_id, en.vec_id, CAST(SUM(l.qip) AS BIGINT) AS ascore
-        |  FROM enc en
-        |  JOIN cells cl ON cl.vec_id = en.vec_id
-        |  JOIN probes pr ON pr.pcell = cl.cell
-        |  JOIN lut l ON l.q_id = pr.q_id AND l.m = en.m AND l.j = en.code
-        |  WHERE en.vec_id <> pr.q_id
-        |  GROUP BY l.q_id, en.vec_id),
-        |top AS (SELECT q_id, vec_id, ascore,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ascore DESC, vec_id ASC) AS rk
-        |  FROM adc)
-        |SELECT q_id, rk, vec_id AS hit_id, ascore
-        |FROM top WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin),
+        |$PqCand64Duck,
+        |$PqEncDuck,
+        |${ivfPqAdcTopkDuck("")}""".stripMargin),
 
     // v24's chain with the codebook-size dial fanned out by a ks CTE,
     // recall-joined against v01's exact chain
     "v32_ivfpq_codebook_curve" -> QueryDef(ivfPqCodebookCurve _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
+      s"""$RoutedDuck,
         |v AS (SELECT vec_id,
         |    list_transform(embedding, x -> FLOOR(CAST(x AS DOUBLE) * 200.0)) AS qv
         |  FROM embeddings),
-        |sub AS (SELECT vec_id, CAST(ms.m AS INT) AS m,
-        |    (qv[ms.m * 8 + 1 : ms.m * 8 + 8])::DOUBLE[] AS sv
-        |  FROM v, (SELECT unnest(generate_series(0, 7)) AS m) ms),
-        |cb AS (SELECT m, vec_id AS j, sv AS cv FROM sub WHERE vec_id < 64),
-        |cand AS (SELECT s.vec_id, s.m, c.j,
-        |    CAST(list_dot_product(s.sv, s.sv) + list_dot_product(c.cv, c.cv)
-        |       - 2 * list_dot_product(s.sv, c.cv) AS BIGINT) AS d2,
-        |    CAST(list_dot_product(s.sv, c.cv) AS BIGINT) AS ip
-        |  FROM sub s JOIN cb c ON c.m = s.m),
+        |$PqCand64Duck,
         |ks AS (SELECT CAST(unnest([16, 32, 64]) AS INT) AS kk),
         |enc AS (SELECT kk, vec_id, m, j AS code FROM (
         |    SELECT ks.kk, cd.vec_id, cd.m, cd.j,
@@ -3398,45 +3188,24 @@ object VectorOps {
         |    SELECT kk, q_id, vec_id,
         |      ROW_NUMBER() OVER (PARTITION BY kk, q_id ORDER BY ascore DESC, vec_id ASC) AS rk
         |    FROM adc) t WHERE rk <= 5),
-        |p AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id,
-        |        round(list_dot_product(q.v, b.v) /
-        |              (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |      FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id),
-        |ex AS (SELECT q_id, hit_id FROM (
-        |    SELECT q_id, hit_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk
-        |    FROM p) t WHERE rk <= 5),
+        |${exactTop5Duck("p", "r")},
         |hits AS (SELECT t.kk, CAST(COUNT(*) AS BIGINT) AS n_hits
         |  FROM top5 t JOIN ex ON ex.q_id = t.q_id AND ex.hit_id = t.vec_id
         |  GROUP BY t.kk)
         |SELECT ks.kk AS n_codewords,
         |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 50.0, 6) AS recall
-        |FROM ks LEFT JOIN hits h ON h.kk = ks.kk
+        |  round(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / exn.n_exact, 6) AS recall
+        |FROM ks LEFT JOIN hits h ON h.kk = ks.kk CROSS JOIN exn
         |ORDER BY n_codewords""".stripMargin),
 
     // composes v01's and v08's oracle chains verbatim (renamed CTEs) —
     // the recall number itself is the graded output
     "v19_ivf_recall" -> QueryDef(ivfRecall _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) AS ccos,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
-        |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-        |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= 2),
-        |p AS (SELECT pr.q_id, b.vec_id AS hit_id,
-        |    round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |  FROM probes pr
-        |  JOIN e q ON q.vec_id = pr.q_id
-        |  JOIN cells cl ON cl.cell = pr.pcell
-        |  JOIN e b ON b.vec_id = cl.vec_id AND b.vec_id != pr.q_id),
+      s"""$EmbDuck,
+        |$AffCcosDuck,
+        |$CellsDuck,
+        |$ProbesDuck,
+        |$IvfPairsDuck,
         |r AS (SELECT q_id, hit_id,
         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p),
         |p2 AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id,
@@ -3533,16 +3302,8 @@ object VectorOps {
     // the oracle restates the salted two-level tournament as ONE naive
     // per-cell window — the equivalence the Spark plan must uphold
     "v17_cell_balanced_sample" -> QueryDef(cellBalancedSample _,
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-        |aff AS (SELECT e.vec_id, c.cid,
-        |    round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) AS ccos,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_dot_product(e.v, c.cv) /
-        |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-        |        c.cid ASC) AS crn
-        |  FROM e, c),
+      s"""$EmbDuck,
+        |$AffCcosDuck,
         |cells AS (SELECT vec_id, cid AS cell, ccos FROM aff WHERE crn = 1),
         |sz AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_sz FROM cells GROUP BY cell),
         |r AS (SELECT cell, vec_id, ccos,
@@ -3555,12 +3316,10 @@ object VectorOps {
     // one candidate/rank/top-5/count chain per probe depth over the
     // shared affinity CTE; the exact baseline is v19's all-pairs chain
     "v21_ivf_probe_curve" -> QueryDef(ivfProbeCurve _, {
-      val cosQB = """round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6)""".stripMargin
       def point(np: Int) =
         s""",
            |pr$np AS (SELECT vec_id AS q_id, cid AS pcell FROM aff WHERE vec_id < 10 AND crn <= $np),
-           |p$np AS (SELECT pr.q_id, b.vec_id AS hit_id, $cosQB AS cos
+           |p$np AS (SELECT pr.q_id, b.vec_id AS hit_id, $CosQBDuck AS cos
            |  FROM pr$np pr
            |  JOIN e q ON q.vec_id = pr.q_id
            |  JOIN cells cl ON cl.cell = pr.pcell
@@ -3570,21 +3329,9 @@ object VectorOps {
            |ap$np AS (SELECT q_id, hit_id FROM r$np WHERE rk <= 5),
            |f$np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found
            |         FROM ex JOIN ap$np USING (q_id, hit_id))"""
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         |aff AS (SELECT e.vec_id, c.cid,
-         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |      ORDER BY round(list_dot_product(e.v, c.cv) /
-         |          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))), 6) DESC,
-         |        c.cid ASC) AS crn
-         |  FROM e, c),
-         |cells AS (SELECT vec_id, cid AS cell FROM aff WHERE crn = 1),
-         |p2x AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id, $cosQB AS cos
-         |  FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id),
-         |r2x AS (SELECT q_id, hit_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM p2x),
-         |ex AS (SELECT q_id, hit_id FROM r2x WHERE rk <= 5),
-         |exn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM ex)${Seq(1, 2, 4).map(point).mkString}
+      s"""$RoutingDuck,
+         |$CellsDuck,
+         |${exactTop5Duck("p2x", "r2x")}${Seq(1, 2, 4).map(point).mkString}
          |SELECT nprobe, n_found, round(CAST(n_found AS DOUBLE) / n_exact, 6) AS recall FROM (
          |  SELECT 1 AS nprobe, n_found FROM f1
          |  UNION ALL SELECT 2, n_found FROM f2
@@ -3664,8 +3411,6 @@ object VectorOps {
     // BIGINT grid BEFORE ranking so the probe order is identical in
     // both engines; the denominator derives from the exact baseline
     "v23_lsh_probe_curve" -> QueryDef(lshProbeCurve _, {
-      val cosQB = """round(list_dot_product(q.v, b.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(b.v, b.v))), 6)""".stripMargin
       val msum = (0 until NumPlanes).map(j =>
         s"(CASE WHEN (mask >> $j) & 1 = 1 THEN m$j ELSE 0 END)").mkString(" + ")
       val margins = (0 until NumPlanes).map(j =>
@@ -3674,7 +3419,7 @@ object VectorOps {
       def point(t: Int) =
         s""",
            |pr$t AS (SELECT q_id, pb FROM ranked WHERE prn <= $t),
-           |p$t AS (SELECT pr.q_id, b.vec_id AS hit_id, $cosQB AS cos
+           |p$t AS (SELECT pr.q_id, b.vec_id AS hit_id, $CosQBDuck AS cos
            |  FROM pr$t pr
            |  JOIN e q ON q.vec_id = pr.q_id
            |  JOIN e b ON b.bucket = pr.pb AND b.vec_id != pr.q_id),
@@ -3693,12 +3438,7 @@ object VectorOps {
          |ranked AS (SELECT q_id, xor(qb0, mask) AS pb,
          |           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY msum ASC, mask ASC) AS prn
          |           FROM mk),
-         |px AS (SELECT q.vec_id AS q_id, b.vec_id AS hit_id, $cosQB AS cos
-         |  FROM e q JOIN e b ON q.vec_id < 10 AND b.vec_id != q.vec_id),
-         |rx AS (SELECT q_id, hit_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, hit_id ASC) AS rk FROM px),
-         |ex AS (SELECT q_id, hit_id FROM rx WHERE rk <= 5),
-         |exn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM ex)${Seq(1, 3, 5, 8).map(point).mkString}
+         |${exactTop5Duck("px", "rx")}${Seq(1, 3, 5, 8).map(point).mkString}
          |SELECT n_probes, n_found, round(CAST(n_found AS DOUBLE) / n_exact, 6) AS recall FROM (
          |  SELECT 1 AS n_probes, n_found FROM f1
          |  UNION ALL SELECT 3, n_found FROM f3

@@ -296,6 +296,15 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("v30: the four prefix dims are one pass — no Union, one rank window per (dim, q_id)") {
+    val p = plan("v30_matryoshka_recall_curve")
+    // the dims are a broadcast parameter frame expanded over ONE corpus
+    // scan, never a per-dim plan unioned together
+    assert(!p.contains("Union"), s"v30 must not union per-dim plans:\n$p")
+    assert("""\], \[dim#\d+, q_id#\d+L?\], \[""".r.findFirstIn(p).isDefined,
+      s"the rank window must partition by (dim, q_id):\n$p")
+  }
+
   test("v33: the OPQ rotation is the codegen'd fwht, not an n² expression tree") {
     val pb = VectorOps.pqCandOpqUncached(spark, d)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
